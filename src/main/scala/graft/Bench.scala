@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     // r19: session config centralized in GraftSession (one definition
     // site shared with Verify/ExplainQ/GraftApp; the r18 AQE rationale
     // comments live there). Identical settings to the r18 bench.

@@ -17,7 +17,7 @@ object ExplainQ {
     val outDir = args(1)
     val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     // r19: shared session config (GraftSession), same settings as Bench
     val spark = GraftSession.builder("graft-explain", cpus)
       .master(s"local[$cpus]")

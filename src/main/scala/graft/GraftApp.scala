@@ -1,7 +1,10 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import graft.config.{GraftConfig, SideDetails}
 import graft.operators.{DriftCompare, DriftOutput}
+import graft.sources.Side
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit}
@@ -29,10 +32,7 @@ object GraftApp {
     }.toMap ++ args.filter(flagArgs).map(a => a.stripPrefix("--") -> "true").toMap
 
   private def buildSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // r19 (VERDICT item 5): the product CLI now shares the bench/verify
-    // session configuration — including the two AQE settings that remove
-    // the near-empty-task overhead — from the one definition site.
+    val cpus = GraftSession.cpus
     GraftSession.builder("graft", cpus)
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
       // tolerate TIMESTAMP(NANOS) parquet (read as nanos-since-epoch long)
@@ -366,15 +366,49 @@ object GraftApp {
     } finally graft.operators.Sampling.release(model)
   }
 
-  def main(args: Array[String]): Unit = {
-    val cmd = args.headOption.getOrElse("run")
-    val opts = parseArgs(args.drop(1))
-    if (cmd == "setup") {
+  /** A subcommand: parses its options first, so a missing one fails
+    * before any session exists, then runs against the one session
+    * [[main]] builds for it.
+    */
+  private type Command = Map[String, String] => SparkSession => Unit
+
+  /** The two-sided commands: sides and diff rules come from `--config`
+    * or `--db1`/`--db2`, with the CLI flags overriding the file.
+    */
+  private def onSides(
+      body: (SparkSession, Side, Side, GraftConfig, Map[String, String]) => Unit): Command =
+    opts => {
+      val config = loadConfig(opts)
+      spark => body(spark, config.db1Details.toSide(spark, "db1"),
+        config.db2Details.toSide(spark, "db2"), config, opts)
+    }
+
+  private def loadConfig(opts: Map[String, String]): GraftConfig =
+    opts.get("config") match {
+      case Some(path) =>
+        val base = GraftConfig.load(path)
+        base.copy(
+          ignoreDates = opts.get("ignore-dates").map(_.toBoolean).getOrElse(base.ignoreDates),
+          targetTables = opts.get("target-tables").map(_.split(",").toSeq).getOrElse(base.targetTables),
+          ignoreTables = opts.get("ignore-tables").map(_.split(",").toSeq).getOrElse(base.ignoreTables),
+          outputPath = opts.getOrElse("output", base.outputPath))
+      case None =>
+        GraftConfig(
+          db1Details = SideDetails("parquet", opts.getOrElse("db1",
+            sys.error("--config or --db1/--db2 required"))),
+          db2Details = SideDetails("parquet", opts.getOrElse("db2",
+            sys.error("--db2 required"))),
+          outputPath = opts.getOrElse("output", "drift_analysis"),
+          targetTables = opts.get("target-tables").map(_.split(",").toSeq).getOrElse(Seq.empty),
+          ignoreTables = opts.get("ignore-tables").map(_.split(",").toSeq).getOrElse(Seq.empty),
+          ignoreDates = opts.get("ignore-dates").exists(_.toBoolean))
+    }
+
+  private val commands = ListMap[String, Command](
+    "setup" -> { opts =>
       // the config may not exist yet — the wizard's create flow handles it
       val path = opts.getOrElse("config", sys.error("setup requires --config <path>"))
-      val spark = buildSession()
-      spark.sparkContext.setLogLevel("WARN")
-      try {
+      spark => {
         val io = new graft.config.ConsoleIO
         val cfg = graft.config.ConfigWizard.loadOrCreate(io, path)
         val wizard = new graft.config.ConfigWizard(spark, io, path, cfg)
@@ -383,10 +417,9 @@ object GraftApp {
           GraftConfig.write(wizard.current, path)
           println(s"config updated: $path")
         } else wizard.run()
-      } finally spark.stop()
-      return
-    }
-    if (cmd == "curate-append") {
+      }
+    },
+    "curate-append" -> { opts =>
       // incremental daily-batch curation against a persisted LSH index:
       // quality gate -> within-batch dedup -> asymmetric index screen ->
       // idempotent index append (see operators.Curation.incremental)
@@ -399,9 +432,7 @@ object GraftApp {
         minQuality = opts.get("min-quality").map(_.toDouble).getOrElse(0.8),
         lang = opts.getOrElse("lang", "en"),
         dedupThreshold = opts.get("dedup-threshold").map(_.toDouble).getOrElse(0.8))
-      val spark = buildSession()
-      spark.sparkContext.setLogLevel("WARN")
-      try {
+      spark => {
         val docs = Tables.t(spark, input, "documents")
         val res = graft.operators.Curation.incremental(docs, index, p)
         res.stages.foreach { s =>
@@ -412,10 +443,9 @@ object GraftApp {
           else s"appended novel docs to index at $index")
         graft.operators.Curation.writeIncrementalOutputs(res, p, out)
         println(s"novel docs + manifest in $out")
-      } finally spark.stop()
-      return
-    }
-    if (cmd == "curate") {
+      }
+    },
+    "curate" -> { opts =>
       // end-to-end corpus curation: quality gate -> dedup -> benchmark
       // decontamination -> per-domain token budget -> sequence packing,
       // with a per-stage drop manifest (see operators.Curation)
@@ -430,9 +460,7 @@ object GraftApp {
         minShared = opts.get("min-shared").map(_.toLong).getOrElse(1L),
         domainBudgetTokens = opts.get("domain-budget").map(_.toLong).getOrElse(50000L),
         maxSeqTokens = opts.get("max-seq-tokens").map(_.toInt).getOrElse(512))
-      val spark = buildSession()
-      spark.sparkContext.setLogLevel("WARN")
-      try {
+      spark => {
         val docs = Tables.t(spark, input, "documents")
         val res = graft.operators.Curation.run(docs, p)
         res.stages.foreach { s =>
@@ -442,10 +470,9 @@ object GraftApp {
         println(s"packed into ${res.nSequences} sequences of <= ${p.maxSeqTokens} tokens")
         graft.operators.Curation.writeOutputs(res, p, out)
         println(s"curated corpus, packed sequences and manifest in $out")
-      } finally spark.stop()
-      return
-    }
-    if (cmd == "screen") {
+      }
+    },
+    "screen" -> { opts =>
       // governance screen over a document corpus: credential/secret
       // detection, canary sweep, and an ε-DP release of per-language
       // corpus counts — the three gates a corpus passes before leaving
@@ -457,9 +484,7 @@ object GraftApp {
       val canaries = opts.get("canaries").map(_.split(",").toSeq)
         .getOrElse(Nil)
       val eps = opts.get("epsilon").map(_.toDouble).getOrElse(1.0)
-      val spark = buildSession()
-      spark.sparkContext.setLogLevel("WARN")
-      try {
+      spark => {
         val docs = Tables.t(spark, input, "documents")
         val secrets = graft.operators.TextAnalysis.detectSecrets(docs)
         secrets.write.mode("overwrite").parquet(s"$out/secrets.parquet")
@@ -486,10 +511,9 @@ object GraftApp {
           java.nio.file.Paths.get(s"$out/screen.json"),
           manifest.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         println(s"secrets=$nSecrets canary_hits=$nCanary -> $out")
-      } finally spark.stop()
-      return
-    }
-    if (cmd == "evalcard") {
+      }
+    },
+    "evalcard" -> { opts =>
       // model-card readout for a classifier over the embeddings table:
       // fit the logistic probe, then calibration table + ECE/MCE,
       // threshold sweep, per-class fairness gaps, isotonic remap, AUC —
@@ -497,15 +521,12 @@ object GraftApp {
       val input = opts.getOrElse("input",
         sys.error("evalcard requires --input <dir containing embeddings.parquet>"))
       val out = opts.getOrElse("output", "evalcard_out")
-      val spark = buildSession()
-      spark.sparkContext.setLogLevel("WARN")
-      try {
+      spark => {
         val m = runEvalCard(spark, input, out)
         println(s"evalcard: ${m.map { case (k, v) => s"$k=$v" }.mkString(" ")} -> $out")
-      } finally spark.stop()
-      return
-    }
-    if (cmd == "classify") {
+      }
+    },
+    "classify" -> { opts =>
       // Naive-Bayes corpus classification: fit on the rows whose label
       // column is set, score EVERY row, write predictions + a per-class
       // summary — the "propagate the seed labels over the whole corpus"
@@ -514,15 +535,12 @@ object GraftApp {
         sys.error("classify requires --input <dir containing documents.parquet>"))
       val out = opts.getOrElse("output", "classify_out")
       val labelCol = opts.getOrElse("label-col", "lang")
-      val spark = buildSession()
-      spark.sparkContext.setLogLevel("WARN")
-      try {
+      spark => {
         val m = runClassify(spark, input, out, labelCol)
         println(s"classify: ${m.map { case (k, v) => s"$k=$v" }.mkString(" ")} -> $out")
-      } finally spark.stop()
-      return
-    }
-    if (cmd == "semdiff") {
+      }
+    },
+    "semdiff" -> { opts =>
       // semantic drift diff between two embedding snapshots: rows with
       // no near-neighbor (cosine >= threshold) on the other side — the
       // tabular diff's anti-join generalized to embedding space (see
@@ -537,13 +555,9 @@ object GraftApp {
       val idCol = opts.getOrElse("id-col", "vec_id")
       val vecCol = opts.getOrElse("vec-col", "embedding")
       val doJoin = opts.contains("join")
-      val spark = buildSession()
-      spark.sparkContext.setLogLevel("WARN")
-      try println(runSemdiff(spark, in1, in2, out, minCos, idCol, vecCol, doJoin))
-      finally spark.stop()
-      return
-    }
-    if (cmd == "semdedup") {
+      spark => println(runSemdiff(spark, in1, in2, out, minCos, idCol, vecCol, doJoin))
+    },
+    "semdedup" -> { opts =>
       // the semantic-dedup pipeline stage as one command: keep one
       // representative per near-dup embedding cluster
       // (operators.Similarity.semanticDedupLsh), write the survivors
@@ -553,13 +567,9 @@ object GraftApp {
       val minCos = opts.get("min-cosine").map(_.toDouble).getOrElse(0.95)
       val idCol = opts.getOrElse("id-col", "vec_id")
       val vecCol = opts.getOrElse("vec-col", "embedding")
-      val spark = buildSession()
-      spark.sparkContext.setLogLevel("WARN")
-      try println(runSemdedup(spark, in, out, minCos, idCol, vecCol))
-      finally spark.stop()
-      return
-    }
-    if (cmd == "semindex") {
+      spark => println(runSemdedup(spark, in, out, minCos, idCol, vecCol))
+    },
+    "semindex" -> { opts =>
       // the persisted-hyperplane-LSH-index lifecycle as one command
       // (operators.SemanticIndex): --mode build seeds the index from a
       // corpus; --mode append folds new vectors in (retry-idempotent);
@@ -580,14 +590,10 @@ object GraftApp {
       val nTables = opts.get("ntables").map(_.toInt).getOrElse(16)
       val maxBucket = opts.get("max-bucket").map(_.toInt).getOrElse(64)
       val ingest = opts.contains("ingest")
-      val spark = buildSession()
-      spark.sparkContext.setLogLevel("WARN")
-      try println(runSemIndex(spark, mode, in, index, out, minCos, idCol,
+      spark => println(runSemIndex(spark, mode, in, index, out, minCos, idCol,
         vecCol, nBits, nTables, maxBucket, ingest))
-      finally spark.stop()
-      return
-    }
-    if (cmd == "embdrift") {
+    },
+    "embdrift" -> { opts =>
       // kernel two-sample drift between two embedding snapshots
       // (operators.Similarity.mmdDrift): prints the statistic NEXT TO its
       // null floor — the same-size even/odd split of db1, which is what
@@ -605,14 +611,10 @@ object GraftApp {
       val nCells = opts.get("cells").map(_.toInt).getOrElse(8)
       val matchCells = opts.contains("match-cells")
       val pqBooks = opts.get("pq-codebooks")
-      val spark = buildSession()
-      spark.sparkContext.setLogLevel("WARN")
-      try println(runEmbdrift(spark, in1, in2, out, nFeat, sigma, idCol,
+      spark => println(runEmbdrift(spark, in1, in2, out, nFeat, sigma, idCol,
         vecCol, nCells, matchCells, pqBooks))
-      finally spark.stop()
-      return
-    }
-    if (cmd == "walks") {
+    },
+    "walks" -> { opts =>
       // export a graph-embedding training corpus: seeded walks over an
       // edge list projected from any table (uniform DeepWalk by
       // default, node2vec-biased when --p/--q are given), plus the
@@ -632,9 +634,7 @@ object GraftApp {
       val win = opts.get("window").map(_.toInt).getOrElse(2)
       val seed = opts.get("seed").map(_.toLong).getOrElse(7L)
       val pq = (opts.get("p").map(_.toDouble), opts.get("q").map(_.toDouble))
-      val spark = buildSession()
-      spark.sparkContext.setLogLevel("WARN")
-      try {
+      spark => {
         import org.apache.spark.sql.functions._
         val rawEdges = Tables.t(spark, input, table)
           .select(col(srcCol).cast("long").as("src"),
@@ -734,10 +734,9 @@ object GraftApp {
         println(s"walks: walks=$nWalks rows=$nRows pairs=$nPairs " +
           s"neg_nodes=$nNeg length=$walkLen window=$win " +
           s"mode=$mode$capNote$symNote -> $out")
-      } finally spark.stop()
-      return
-    }
-    if (cmd == "experiment") {
+      }
+    },
+    "experiment" -> { opts =>
       // full A/B readout over an events table: SRM gate, the mean
       // readout three ways (z / CUPED / winsorized), ratio CIs (delta
       // method + bucket jackknife), QTE, and the peek-safe mSPRT
@@ -749,9 +748,7 @@ object GraftApp {
       val p = graft.operators.Experiment.ReadoutParams(
         capQuantile = opts.get("cap-quantile").map(_.toDouble).getOrElse(0.95),
         tau = opts.get("tau").map(_.toDouble).getOrElse(0.1))
-      val spark = buildSession()
-      spark.sparkContext.setLogLevel("WARN")
-      try {
+      spark => {
         import org.apache.spark.sql.functions._
         val ev = Tables.events(spark, input)
         val perUser = ev.groupBy("user_id").agg(
@@ -797,48 +794,47 @@ object GraftApp {
             s"${clu.getAs[Any]("z")} vs naive-unit variance")
           seg.write.mode("overwrite").parquet(s"$out/srm_by_segment.parquet")
           println(s"validation tables in $out")
-          return
+        } else {
+          val r = graft.operators.Experiment.readout(perUser, daily, p)
+          // every readout collapses to a bounded table — collect for the
+          // manifest is model-sized by construction (arms/buckets/days)
+          val manifest = new StringBuilder("{\n")
+          r.all.foreach { case (name, df) =>
+            df.write.mode("overwrite").parquet(s"$out/$name.parquet")
+          }
+          def d6(v: Any): String = v match {
+            case null => "null"
+            case x: java.lang.Double => f"$x%.6f"
+            case x => x.toString
+          }
+          val srmRow = r.srm.head()
+          val zRow = r.proportions.head()
+          val cRow = r.cuped.head()
+          val wRow = r.winsorized.head()
+          val lastP = r.monitor.orderBy(col("day").desc).head()
+          manifest ++= s"""  "srm_chi2": ${d6(srmRow.getAs[Any]("chi2"))},\n"""
+          manifest ++= s"""  "z": ${d6(zRow.getAs[Any]("z"))},\n"""
+          manifest ++= s"""  "delta_raw": ${d6(cRow.getAs[Any]("delta_raw"))},\n"""
+          manifest ++= s"""  "delta_cuped": ${d6(cRow.getAs[Any]("delta_adjusted"))},\n"""
+          manifest ++= s"""  "delta_winsorized": ${d6(wRow.getAs[Any]("delta_winsorized"))},\n"""
+          r.bayes.foreach { b =>
+            manifest ++= s"""  "p_b_beats_a": ${d6(b.head().getAs[Any]("p_b_beats_a"))},\n"""
+          }
+          manifest ++= s"""  "always_valid_p": ${d6(lastP.getAs[Any]("always_valid_p"))}\n}"""
+          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
+          java.nio.file.Files.write(
+            java.nio.file.Paths.get(s"$out/readout.json"),
+            manifest.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          println(s"SRM chi2=${d6(srmRow.getAs[Any]("chi2"))}  " +
+            s"z=${d6(zRow.getAs[Any]("z"))}  " +
+            s"cuped=${d6(cRow.getAs[Any]("delta_adjusted"))}  " +
+            s"winsorized=${d6(wRow.getAs[Any]("delta_winsorized"))}  " +
+            s"always_valid_p=${d6(lastP.getAs[Any]("always_valid_p"))}")
+          println(s"readout tables + readout.json in $out")
         }
-        val r = graft.operators.Experiment.readout(perUser, daily, p)
-        // every readout collapses to a bounded table — collect for the
-        // manifest is model-sized by construction (arms/buckets/days)
-        val manifest = new StringBuilder("{\n")
-        r.all.foreach { case (name, df) =>
-          df.write.mode("overwrite").parquet(s"$out/$name.parquet")
-        }
-        def d6(v: Any): String = v match {
-          case null => "null"
-          case x: java.lang.Double => f"$x%.6f"
-          case x => x.toString
-        }
-        val srmRow = r.srm.head()
-        val zRow = r.proportions.head()
-        val cRow = r.cuped.head()
-        val wRow = r.winsorized.head()
-        val lastP = r.monitor.orderBy(col("day").desc).head()
-        manifest ++= s"""  "srm_chi2": ${d6(srmRow.getAs[Any]("chi2"))},\n"""
-        manifest ++= s"""  "z": ${d6(zRow.getAs[Any]("z"))},\n"""
-        manifest ++= s"""  "delta_raw": ${d6(cRow.getAs[Any]("delta_raw"))},\n"""
-        manifest ++= s"""  "delta_cuped": ${d6(cRow.getAs[Any]("delta_adjusted"))},\n"""
-        manifest ++= s"""  "delta_winsorized": ${d6(wRow.getAs[Any]("delta_winsorized"))},\n"""
-        r.bayes.foreach { b =>
-          manifest ++= s"""  "p_b_beats_a": ${d6(b.head().getAs[Any]("p_b_beats_a"))},\n"""
-        }
-        manifest ++= s"""  "always_valid_p": ${d6(lastP.getAs[Any]("always_valid_p"))}\n}"""
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$out/readout.json"),
-          manifest.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        println(s"SRM chi2=${d6(srmRow.getAs[Any]("chi2"))}  " +
-          s"z=${d6(zRow.getAs[Any]("z"))}  " +
-          s"cuped=${d6(cRow.getAs[Any]("delta_adjusted"))}  " +
-          s"winsorized=${d6(wRow.getAs[Any]("delta_winsorized"))}  " +
-          s"always_valid_p=${d6(lastP.getAs[Any]("always_valid_p"))}")
-        println(s"readout tables + readout.json in $out")
-      } finally spark.stop()
-      return
-    }
-    if (cmd == "er") {
+      }
+    },
+    "er" -> { opts =>
       // entity resolution over one table: blocked Damerau self-match on
       // --key-col (block = last --block-suffix chars, robust to head
       // typos), connected components, entity_id = min id per cluster
@@ -851,9 +847,7 @@ object GraftApp {
       val maxEdits = opts.get("max-edits").map(_.toInt).getOrElse(2)
       val blockLen = opts.get("block-suffix").map(_.toInt).getOrElse(6)
       val out = opts.getOrElse("output", "er_out")
-      val spark = buildSession()
-      spark.sparkContext.setLogLevel("WARN")
-      try {
+      spark => {
         val df = Tables.t(spark, input, table)
         val ents = graft.operators.FuzzyJoin.resolveEntitiesDamerau(
           df, idCol, keyCol,
@@ -867,150 +861,138 @@ object GraftApp {
         println(s"er: $table $n rows -> $nEnt entities " +
           s"(${n - nEnt} merged) at damerau <= $maxEdits, " +
           s"block = last $blockLen chars of $keyCol; mapping in $out/entities")
-      } finally spark.stop()
-      return
-    }
-    val config: GraftConfig = opts.get("config") match {
-      case Some(path) =>
-        val base = GraftConfig.load(path)
-        base.copy(
-          ignoreDates = opts.get("ignore-dates").map(_.toBoolean).getOrElse(base.ignoreDates),
-          targetTables = opts.get("target-tables").map(_.split(",").toSeq).getOrElse(base.targetTables),
-          ignoreTables = opts.get("ignore-tables").map(_.split(",").toSeq).getOrElse(base.ignoreTables),
-          outputPath = opts.getOrElse("output", base.outputPath))
-      case None =>
-        GraftConfig(
-          db1Details = SideDetails("parquet", opts.getOrElse("db1",
-            sys.error("--config or --db1/--db2 required"))),
-          db2Details = SideDetails("parquet", opts.getOrElse("db2",
-            sys.error("--db2 required"))),
-          outputPath = opts.getOrElse("output", "drift_analysis"),
-          targetTables = opts.get("target-tables").map(_.split(",").toSeq).getOrElse(Seq.empty),
-          ignoreTables = opts.get("ignore-tables").map(_.split(",").toSeq).getOrElse(Seq.empty),
-          ignoreDates = opts.get("ignore-dates").exists(_.toBoolean))
-    }
+      }
+    },
+    "run" -> onSides { (spark, s1, s2, config, _) =>
+      val t0 = System.nanoTime()
+      val result = new DriftCompare(spark, s1, s2, config.diffConfig).compareAll()
+      DriftOutput.write(spark, result, config.outputPath)
+      println(DriftOutput.report(result))
+      println(f"completed in ${(System.nanoTime() - t0) / 1e9}%.1f sec; " +
+        s"results in ${config.outputPath}")
+    },
+    "suggest-ignores" -> onSides { (spark, s1, s2, config, _) =>
+      suggestIgnores(spark, s1, s2, config).foreach(println)
+    },
+    "profile" -> onSides { (_, s1, _, _, opts) =>
+      // per-table data-quality scan of side db1 (extension beyond the
+      // reference CLI): single-pass HLL profile unless --exact
+      val exact = opts.get("exact").exists(_.toBoolean)
+      s1.listTables().foreach { table =>
+        println(s"== $table ==")
+        val df = s1.table(table)
+        val prof = if (exact) graft.operators.Profile.profileExact(df)
+                   else graft.operators.Profile.profileApprox(df)
+        prof.orderBy("col_name").collect().foreach { r =>
+          println(f"${r.getString(0)}%-24s rows=${r.getLong(1)}%-9d " +
+            f"nulls=${r.getLong(2)}%-7d ndv=${r.getLong(3)}%-9d " +
+            s"min=${r.getString(4)} max=${r.getString(5)}")
+        }
+      }
+    },
+    "dedup" -> onSides { (spark, s1, _, _, opts) =>
+      // corpus near-dup removal from the CLI (extension): writes the
+      // deduplicated table + a keeper manifest under --output
+      val table = opts.getOrElse("table", "documents")
+      val textCol = opts.getOrElse("text-col", "text")
+      val idCol = opts.getOrElse("id-col", "doc_id")
+      val threshold = opts.getOrElse("threshold", "0.8").toDouble
+      val out = opts.getOrElse("output", "dedup_out")
+      val df = s1.table(table)
+      val total = df.count()
+      val kept = graft.operators.Dedup.dedupCorpus(df, textCol, idCol, threshold)
+      kept.write.mode("overwrite").parquet(s"$out/$table")
+      val nKept = spark.read.parquet(s"$out/$table").count()
+      println(s"dedup: $table $total rows -> $nKept kept " +
+        f"(${100.0 * (total - nKept) / math.max(total, 1)}%.1f%% removed) at " +
+        s"jaccard >= $threshold; output in $out/$table")
+    },
+    "overlap" -> onSides { (_, s1, s2, _, opts) =>
+      // sketch-based key overlap between the two sides' copies of a
+      // table (extension): per-side/union HLL estimates + exact
+      // intersection only when --exact
+      val table = opts.getOrElse("table", "documents")
+      val keyCol = opts.getOrElse("key-col", "doc_id")
+      val est = graft.operators.Hll
+        .overlap(s1.table(table), s2.table(table), keyCol)
+        .collect()(0)
+      println(s"overlap[$table.$keyCol] " +
+        f"db1~${est.getAs[Double]("est_a")}%.0f " +
+        f"db2~${est.getAs[Double]("est_b")}%.0f " +
+        f"union~${est.getAs[Double]("est_union")}%.0f " +
+        f"intersect~${est.getAs[Double]("est_intersect")}%.0f " +
+        f"jaccard~${est.getAs[Double]("jaccard_est")}%.4f")
+      if (opts.get("exact").exists(_.toBoolean)) {
+        val exact = s1.table(table).select(keyCol)
+          .intersect(s2.table(table).select(keyCol)).count()
+        println(s"overlap[$table.$keyCol] exact intersect = $exact")
+      }
+    },
+    "psi" -> onSides { (spark, s1, s2, config, opts) =>
+      // distribution drift from the CLI (extension): PSI per shared
+      // numeric column of each shared table (or --table)
+      val nBins = opts.getOrElse("bins", "10").toInt
+      val tables = opts.get("table").map(Seq(_)).getOrElse(
+        (s1.listTables().toSet intersect s2.listTables().toSet).toSeq.sorted)
+      val compare = new DriftCompare(spark, s1, s2, config.diffConfig)
+      tables.foreach { table =>
+        compare.distributionDrift(table, nBins) match {
+          case None => println(s"psi[$table] no shared numeric columns")
+          case Some(df) => df.orderBy("col_name").collect().foreach { r =>
+            println(f"psi[$table.${r.getString(0)}] ${r.getDouble(1)}%.6f " +
+              s"(n1=${r.getLong(2)} n2=${r.getLong(3)})")
+          }
+        }
+      }
+    },
+    "ks" -> onSides { (_, s1, s2, _, opts) =>
+      // nonparametric drift from the CLI (extension): two-sample KS
+      // distance per shared numeric column of each shared table (or
+      // --table); PSI's bin-free sibling — sensitive anywhere on the
+      // CDF, not just where the bins land. A column must be a real
+      // NumericType on BOTH sides (a numeric-in-db1 / varchar-in-db2
+      // column is type drift, not a distribution to compare), and
+      // the DECIMAL(16,2) canonicalization keeps values to ±10^14 —
+      // wider-ranged ids overflow to null and would silently
+      // truncate the compared distribution.
+      val tables = opts.get("table").map(Seq(_)).getOrElse(
+        (s1.listTables().toSet intersect s2.listTables().toSet).toSeq.sorted)
+      tables.foreach { table =>
+        val a = s1.table(table); val b = s2.table(table)
+        def numericCols(df: org.apache.spark.sql.DataFrame): Set[String] =
+          df.schema.fields.collect {
+            case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] =>
+              f.name
+          }.toSet
+        val shared = (numericCols(a) intersect numericCols(b)).toSeq.sorted
+        if (shared.isEmpty) println(s"ks[$table] no shared numeric columns")
+        shared.foreach { name =>
+          val r = graft.operators.Stats
+            .ksTestFrames(a, b, name, precision = 16, scale = 2).head()
+          if (r.isNullAt(r.fieldIndex("d")))
+            println(s"ks[$table.$name] undefined (an empty or " +
+              "out-of-range side; n1=" + r.getAs[Long]("n1") +
+              " n2=" + r.getAs[Long]("n2") + ")")
+          else
+            println(f"ks[$table.$name] d=${r.getAs[Double]("d")}%.6f " +
+              f"p~${r.getAs[Double]("p_approx")}%.6f " +
+              s"(n1=${r.getAs[Long]("n1")} n2=${r.getAs[Long]("n2")})")
+        }
+      }
+    })
+
+  /** Runs one command. An unknown name fails before any option parsing
+    * or session build; a known one parses its options, then gets the
+    * session built, configured and stopped here.
+    */
+  def main(args: Array[String]): Unit = {
+    val cmd = args.headOption.getOrElse("run")
+    val run = commands.getOrElse(cmd, sys.error(
+      s"unknown command: $cmd (expected ${commands.keys.mkString(" | ")})"))
+    val body = run(parseArgs(args.drop(1)))
     val spark = buildSession()
     spark.sparkContext.setLogLevel("WARN")
-    try {
-      val s1 = config.db1Details.toSide(spark, "db1")
-      val s2 = config.db2Details.toSide(spark, "db2")
-      cmd match {
-        case "run" =>
-          val t0 = System.nanoTime()
-          val comparator = new DriftCompare(spark, s1, s2, config.diffConfig)
-          val result = comparator.compareAll()
-          DriftOutput.write(spark, result, config.outputPath)
-          comparator.cleanup()
-          println(DriftOutput.report(result, config.db1Details.path, config.db2Details.path))
-          println(f"completed in ${(System.nanoTime() - t0) / 1e9}%.1f sec; " +
-            s"results in ${config.outputPath}")
-        case "suggest-ignores" =>
-          suggestIgnores(spark, s1, s2, config).foreach(println)
-        case "profile" =>
-          // per-table data-quality scan of side db1 (extension beyond the
-          // reference CLI): single-pass HLL profile unless --exact
-          val exact = opts.get("exact").exists(_.toBoolean)
-          s1.listTables().foreach { table =>
-            println(s"== $table ==")
-            val df = s1.table(table)
-            val prof = if (exact) graft.operators.Profile.profileExact(df)
-                       else graft.operators.Profile.profileApprox(df)
-            prof.orderBy("col_name").collect().foreach { r =>
-              println(f"${r.getString(0)}%-24s rows=${r.getLong(1)}%-9d " +
-                f"nulls=${r.getLong(2)}%-7d ndv=${r.getLong(3)}%-9d " +
-                s"min=${r.getString(4)} max=${r.getString(5)}")
-            }
-          }
-        case "dedup" =>
-          // corpus near-dup removal from the CLI (extension): writes the
-          // deduplicated table + a keeper manifest under --output
-          val table = opts.getOrElse("table", "documents")
-          val textCol = opts.getOrElse("text-col", "text")
-          val idCol = opts.getOrElse("id-col", "doc_id")
-          val threshold = opts.getOrElse("threshold", "0.8").toDouble
-          val out = opts.getOrElse("output", "dedup_out")
-          val df = s1.table(table)
-          val total = df.count()
-          val kept = graft.operators.Dedup.dedupCorpus(df, textCol, idCol, threshold)
-          kept.write.mode("overwrite").parquet(s"$out/$table")
-          val nKept = spark.read.parquet(s"$out/$table").count()
-          println(s"dedup: $table $total rows -> $nKept kept " +
-            f"(${100.0 * (total - nKept) / math.max(total, 1)}%.1f%% removed) at " +
-            s"jaccard >= $threshold; output in $out/$table")
-        case "overlap" =>
-          // sketch-based key overlap between the two sides' copies of a
-          // table (extension): per-side/union HLL estimates + exact
-          // intersection only when --exact
-          val table = opts.getOrElse("table", "documents")
-          val keyCol = opts.getOrElse("key-col", "doc_id")
-          val est = graft.operators.Hll
-            .overlap(s1.table(table), s2.table(table), keyCol)
-            .collect()(0)
-          println(s"overlap[$table.$keyCol] " +
-            f"db1~${est.getAs[Double]("est_a")}%.0f " +
-            f"db2~${est.getAs[Double]("est_b")}%.0f " +
-            f"union~${est.getAs[Double]("est_union")}%.0f " +
-            f"intersect~${est.getAs[Double]("est_intersect")}%.0f " +
-            f"jaccard~${est.getAs[Double]("jaccard_est")}%.4f")
-          if (opts.get("exact").exists(_.toBoolean)) {
-            val exact = s1.table(table).select(keyCol)
-              .intersect(s2.table(table).select(keyCol)).count()
-            println(s"overlap[$table.$keyCol] exact intersect = $exact")
-          }
-        case "psi" =>
-          // distribution drift from the CLI (extension): PSI per shared
-          // numeric column of each shared table (or --table)
-          val nBins = opts.getOrElse("bins", "10").toInt
-          val tables = opts.get("table").map(Seq(_)).getOrElse(
-            (s1.listTables().toSet intersect s2.listTables().toSet).toSeq.sorted)
-          val compare = new DriftCompare(spark, s1, s2, config.diffConfig)
-          tables.foreach { table =>
-            compare.distributionDrift(table, nBins) match {
-              case None => println(s"psi[$table] no shared numeric columns")
-              case Some(df) => df.orderBy("col_name").collect().foreach { r =>
-                println(f"psi[$table.${r.getString(0)}] ${r.getDouble(1)}%.6f " +
-                  s"(n1=${r.getLong(2)} n2=${r.getLong(3)})")
-              }
-            }
-          }
-        case "ks" =>
-          // nonparametric drift from the CLI (extension): two-sample KS
-          // distance per shared numeric column of each shared table (or
-          // --table); PSI's bin-free sibling — sensitive anywhere on the
-          // CDF, not just where the bins land. A column must be a real
-          // NumericType on BOTH sides (a numeric-in-db1 / varchar-in-db2
-          // column is type drift, not a distribution to compare), and
-          // the DECIMAL(16,2) canonicalization keeps values to ±10^14 —
-          // wider-ranged ids overflow to null and would silently
-          // truncate the compared distribution.
-          val tables = opts.get("table").map(Seq(_)).getOrElse(
-            (s1.listTables().toSet intersect s2.listTables().toSet).toSeq.sorted)
-          tables.foreach { table =>
-            val a = s1.table(table); val b = s2.table(table)
-            def numericCols(df: org.apache.spark.sql.DataFrame): Set[String] =
-              df.schema.fields.collect {
-                case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] =>
-                  f.name
-              }.toSet
-            val shared = (numericCols(a) intersect numericCols(b)).toSeq.sorted
-            if (shared.isEmpty) println(s"ks[$table] no shared numeric columns")
-            shared.foreach { name =>
-              val r = graft.operators.Stats
-                .ksTestFrames(a, b, name, precision = 16, scale = 2).head()
-              if (r.isNullAt(r.fieldIndex("d")))
-                println(s"ks[$table.$name] undefined (an empty or " +
-                  "out-of-range side; n1=" + r.getAs[Long]("n1") +
-                  " n2=" + r.getAs[Long]("n2") + ")")
-              else
-                println(f"ks[$table.$name] d=${r.getAs[Double]("d")}%.6f " +
-                  f"p~${r.getAs[Double]("p_approx")}%.6f " +
-                  s"(n1=${r.getAs[Long]("n1")} n2=${r.getAs[Long]("n2")})")
-            }
-          }
-        case other =>
-          sys.error(s"unknown command: $other (expected run | suggest-ignores | setup | profile | dedup | overlap | psi | ks)")
-      }
-    } finally spark.stop()
+    try body(spark) finally spark.stop()
   }
 
   /** Wizard analog (reference: lotad/config_wizard.py:33-147): per shared
@@ -1025,8 +1007,7 @@ object GraftApp {
     * deliberate: both sides cast the same way, and the wizard only needs
     * match/no-match, not type-exact joins.
     */
-  def suggestIgnoreColumns(spark: SparkSession, s1: graft.sources.Side,
-                           s2: graft.sources.Side,
+  def suggestIgnoreColumns(spark: SparkSession, s1: Side, s2: Side,
                            config: GraftConfig): Map[String, Seq[String]] = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{count, lit, row_number}
@@ -1063,8 +1044,8 @@ object GraftApp {
   }
 
   /** YAML-fragment rendering of [[suggestIgnoreColumns]] (CLI output). */
-  def suggestIgnores(spark: SparkSession, s1: graft.sources.Side,
-                     s2: graft.sources.Side, config: GraftConfig): Seq[String] =
+  def suggestIgnores(spark: SparkSession, s1: Side, s2: Side,
+                     config: GraftConfig): Seq[String] =
     suggestIgnoreColumns(spark, s1, s2, config).toSeq.sortBy(_._1).map {
       case (table, cols) =>
         s"- table_name: $table\n  rules:" +

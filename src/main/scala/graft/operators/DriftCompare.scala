@@ -179,9 +179,6 @@ final class DriftCompare(
     * Returns None when the sides share no columns
     * (reference: lotad/db_compare.py:337-339).
     */
-  /** Kept for API compatibility; the run-scan diff holds no session state. */
-  def cleanup(): Unit = ()
-
   def dataDrift(table: String): Option[DataFrame] = {
     val in1 = dropIgnored(sideInput(side1, table), table)
     val in2 = dropIgnored(sideInput(side2, table), table)
@@ -270,6 +267,22 @@ final class DriftCompare(
       .filter(col("n_db1") =!= col("n_db2")))
   }
 
+  /** Default bag diff: dispatches on the normalized projection's width.
+    * Narrow tables take the one-scan [[dataDriftBag]] (the full-row
+    * shuffle is cheap when rows are a handful of columns); at or above
+    * `wideThreshold` columns the shuffle volume of the full row dwarfs a
+    * second parquet scan and [[dataDriftBagHashed]] wins — the 100 TB
+    * design point for fact tables. Both produce identical rows, so the
+    * choice is purely a physical-plan decision.
+    */
+  def dataDriftBagAuto(table: String, wideThreshold: Int = 12): Option[DataFrame] = {
+    val in1 = dropIgnored(sideInput(side1, table), table)
+    val in2 = dropIgnored(sideInput(side2, table), table)
+    val (p1, _) = normalizedProjection(in1, in2)
+    if (p1.schema.size >= wideThreshold) dataDriftBagHashed(table)
+    else dataDriftBag(table)
+  }
+
   /** Hash-keyed twin of [[dataDriftBag]] for wide tables at scale: the
     * multiplicity aggregation groups on `hashed_row` ALONE, so the shuffle
     * carries (16-byte hash, two counts) per distinct row instead of the
@@ -291,22 +304,6 @@ final class DriftCompare(
     * strategy is left to AQE, which broadcasts exactly when the measured
     * build side is small and falls back to a shuffled hash join otherwise.
     */
-  /** Default bag diff: dispatches on the normalized projection's width.
-    * Narrow tables take the one-scan [[dataDriftBag]] (the full-row
-    * shuffle is cheap when rows are a handful of columns); at or above
-    * `wideThreshold` columns the shuffle volume of the full row dwarfs a
-    * second parquet scan and [[dataDriftBagHashed]] wins — the 100 TB
-    * design point for fact tables. Both produce identical rows, so the
-    * choice is purely a physical-plan decision.
-    */
-  def dataDriftBagAuto(table: String, wideThreshold: Int = 12): Option[DataFrame] = {
-    val in1 = dropIgnored(sideInput(side1, table), table)
-    val in2 = dropIgnored(sideInput(side2, table), table)
-    val (p1, _) = normalizedProjection(in1, in2)
-    if (p1.schema.size >= wideThreshold) dataDriftBagHashed(table)
-    else dataDriftBag(table)
-  }
-
   def dataDriftBagHashed(table: String): Option[DataFrame] = {
     val in1 = dropIgnored(sideInput(side1, table), table)
     val in2 = dropIgnored(sideInput(side2, table), table)
@@ -350,6 +347,10 @@ final class DriftCompare(
     * Spark jobs and run concurrently (reference fans out one OS process
     * per table, lotad/db_compare.py:192-217; we submit concurrent jobs in
     * one session instead).
+    *
+    * Each drifted table's frame comes back persisted, so writing it does
+    * not recompute the diff; releasing those is the caller's. A table
+    * whose summary is zero is released here, as soon as it is counted.
     */
   def compareAll(parallelism: Int = Runtime.getRuntime.availableProcessors().min(8)): DriftResult = {
     import scala.concurrent._
@@ -359,25 +360,25 @@ final class DriftCompare(
     val missing = missingTableDrift()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(parallelism, 1))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val results =
+    val drifted =
       try {
         val futs = shared.map { t =>
           Future {
-            dataDrift(t).map { df =>
+            dataDrift(t).flatMap { df =>
               val cached = df.persist()
               val s = summarize(t, cached)
-              (t, cached, s)
+              if (s.rowsOnlyInDb1 + s.rowsOnlyInDb2 > 0) Some((t, cached, s))
+              else { cached.unpersist(); None }
             }
           }
         }
         Await.result(Future.sequence(futs), 24.hours).flatten
       } finally pool.shutdown()
-    val withRows = results.filter { case (_, _, s) => s.rowsOnlyInDb1 + s.rowsOnlyInDb2 > 0 }
     DriftResult(
       schemaDrift = schema,
       missingTables = missing,
-      dataDrift = withRows.map { case (t, df, _) => t -> df }.toMap,
-      summary = withRows.map(_._3))
+      dataDrift = drifted.map { case (t, df, _) => t -> df }.toMap,
+      summary = drifted.map(_._3))
   }
 }
 
@@ -440,11 +441,10 @@ object DriftOutput {
     * missing-table and schema-drift values carry the stored literal
     * quote-wrapping, the data-drift summary does not, rows sort like the
     * reference's ORDER BY clauses, and the output has no trailing newline.
-    * The `db1`/`db2` arguments are accepted for call-site compatibility
-    * but the rendered identifiers come from the result rows, as in the
+    * The rendered side ids come from the result rows, as in the
     * reference (it renders the stored db ids).
     */
-  def report(result: DriftResult, db1: String = "", db2: String = ""): String = {
+  def report(result: DriftResult): String = {
     val sb = new StringBuilder
     sb.append("Database Comparison Report")
     if (result.missingTables.nonEmpty) {

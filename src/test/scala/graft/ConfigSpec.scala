@@ -60,6 +60,18 @@ class ConfigSpec extends SparkSpecBase {
     assert(out.head.contains("rule_value: run_id"))
     assert(!out.head.contains("rule_value: id") && !out.head.contains("rule_value: name"))
   }
+
+  test("an unknown command fails before option parsing and names every command") {
+    val e = intercept[RuntimeException](GraftApp.main(Array("bogus")))
+    val listed = e.getMessage.stripPrefix("unknown command: bogus (expected ")
+    assert(listed != e.getMessage && listed.endsWith(")"))
+    assert(listed.stripSuffix(")").split(" \\| ").toSet == Set(
+      "run", "suggest-ignores", "setup", "profile", "dedup", "overlap", "psi",
+      "ks", "curate-append", "curate", "screen", "evalcard", "classify",
+      "semdiff", "semdedup", "semindex", "embdrift", "walks", "experiment",
+      "er"))
+    assert(!spark.sparkContext.isStopped)
+  }
 }
 
 class ConfigWriteSpec extends SparkSpecBase {

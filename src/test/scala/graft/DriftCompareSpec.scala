@@ -217,6 +217,20 @@ class DriftCompareSpec extends SparkSpecBase {
       && rep.contains("db2 - 1"))
   }
 
+  test("compareAll releases the frames of zero-drift tables") {
+    // rows no other spec uses, so no cached plan is shared with this one
+    val rows = Seq((11L, "release-a"), (12L, "release-b")).toDF("id", "v")
+    val c = new DriftCompare(spark,
+      MemorySide("db1", Map("same" -> rows, "drifted" -> rows.filter($"id" =!= 12L))),
+      MemorySide("db2", Map("same" -> rows, "drifted" -> rows)))
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val r = c.compareAll(parallelism = 2)
+    try {
+      assert(r.dataDrift.keySet == Set("drifted"))
+      assert(spark.sparkContext.getPersistentRDDs.size == before + 1)
+    } finally r.dataDrift.values.foreach(_.unpersist())
+  }
+
   test("summaryDf drift counts are LongType (no 2^31 overflow) and survive > Int.MaxValue") {
     import org.apache.spark.sql.types.LongType
     val big = Int.MaxValue.toLong + 7L

@@ -1,0 +1,33 @@
+package graft
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Pins the set of programs under src/main. Profiling goes through Bench,
+  * ExplainQ and the perfbench harness, all under GraftSession's config; a
+  * new `def main` would be a one-off driver with its own session and knobs.
+  */
+class EntrypointSpec extends AnyFunSuite {
+  private val owner =
+    """(?m)^\s*(?:(?:private|final|abstract|sealed|case)\s+)*(?:object|class|trait)\s+(\w+)""".r
+
+  test("the only mains under src/main are GraftApp, Bench, Verify and ExplainQ") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
+    val walk = Files.walk(root)
+    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val owners = files.flatMap { f =>
+      val src = new String(Files.readAllBytes(f), UTF_8)
+      "def main\\(".r.findAllMatchIn(src).map { m =>
+        owner.findAllMatchIn(src.substring(0, m.start)).map(_.group(1)).toSeq
+          .lastOption.getOrElse(f.toString)
+      }
+    }
+    assert(owners.sorted == Seq("Bench", "ExplainQ", "GraftApp", "Verify"))
+  }
+}

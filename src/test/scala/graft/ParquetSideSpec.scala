@@ -33,7 +33,6 @@ class ParquetSideSpec extends SparkSpecBase {
       Seq(("t", 0L, 1L)))
     val out = java.nio.file.Files.createTempDirectory("driftout").toString
     DriftOutput.write(spark, r, out)
-    c.cleanup()
     val drift = spark.read.parquet(s"$out/t")
     assert(drift.count() == 1 && drift.select("id").as[Long].collect()(0) == 2L)
     val summary = spark.read.parquet(s"$out/lotad_db_data_drift_summary")
