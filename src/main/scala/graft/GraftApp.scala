@@ -866,10 +866,12 @@ object GraftApp {
     "run" -> onSides { (spark, s1, s2, config, _) =>
       val t0 = System.nanoTime()
       val result = new DriftCompare(spark, s1, s2, config.diffConfig).compareAll()
-      DriftOutput.write(spark, result, config.outputPath)
-      println(DriftOutput.report(result))
-      println(f"completed in ${(System.nanoTime() - t0) / 1e9}%.1f sec; " +
-        s"results in ${config.outputPath}")
+      try {
+        DriftOutput.write(spark, result, config.outputPath)
+        println(DriftOutput.report(result))
+      } finally result.dataDrift.values.foreach(_.unpersist())
+      println("completed in %.1f sec; results in %s".formatLocal(java.util.Locale.ROOT,
+        (System.nanoTime() - t0) / 1e9, config.outputPath))
     },
     "suggest-ignores" -> onSides { (spark, s1, s2, config, _) =>
       suggestIgnores(spark, s1, s2, config).foreach(println)

@@ -81,19 +81,27 @@ final class DriftCompare(
 
   import spark.implicits._
 
+  /** The selected table names of each side, one listing per side. */
+  private def listSelected(): (Set[String], Set[String]) =
+    (side1.listTables().filter(config.tableSelected).toSet,
+      side2.listTables().filter(config.tableSelected).toSet)
+
+  private def shared(t1: Set[String], t2: Set[String]): Seq[String] =
+    t1.intersect(t2).toSeq.sorted
+
+  private def missing(t1: Set[String], t2: Set[String]): Seq[MissingTableRow] =
+    (t1 -- t2).toSeq.sorted.map(MissingTableRow(_, side1.id, side2.id)) ++
+      (t2 -- t1).toSeq.sorted.map(MissingTableRow(_, side2.id, side1.id))
+
   def sharedTables(): Seq[String] = {
-    val t1 = side1.listTables().toSet
-    val t2 = side2.listTables().toSet
-    t1.intersect(t2).toSeq.sorted.filter(config.tableSelected)
+    val (t1, t2) = listSelected()
+    shared(t1, t2)
   }
 
   /** Tables present on exactly one side (reference: lotad/db_compare.py:118-147). */
   def missingTableDrift(): Seq[MissingTableRow] = {
-    val t1 = side1.listTables().filter(config.tableSelected).toSet
-    val t2 = side2.listTables().filter(config.tableSelected).toSet
-    val only1 = (t1 -- t2).toSeq.sorted.map(MissingTableRow(_, side1.id, side2.id))
-    val only2 = (t2 -- t1).toSeq.sorted.map(MissingTableRow(_, side2.id, side1.id))
-    only1 ++ only2
+    val (t1, t2) = listSelected()
+    missing(t1, t2)
   }
 
   private def effectiveSchema(side: Side, table: String): Seq[StructField] = {
@@ -343,42 +351,63 @@ final class DriftCompare(
       side2.id, counts.getOrElse(side2.id, 0L))
   }
 
-  /** Full comparison across the catalog. Per-table diffs are independent
-    * Spark jobs and run concurrently (reference fans out one OS process
-    * per table, lotad/db_compare.py:192-217; we submit concurrent jobs in
-    * one session instead).
+  /** Full comparison across the catalog. Each side is listed once; then
+    * the table is the unit of work: one task per shared table resolves
+    * both schemas (schema drift), plans the hash diff, and persists and
+    * counts it (summary). Up to `parallelism` tables run at once, so one
+    * table's schema reads overlap other tables' shuffles (reference fans
+    * out one OS process per table, lotad/db_compare.py:192-217; we submit
+    * concurrent jobs in one session instead). Schema-drift and summary
+    * rows come back in shared-table order. If a table throws, the call
+    * rethrows once every table is done, and releases what it persisted.
     *
     * Each drifted table's frame comes back persisted, so writing it does
     * not recompute the diff; releasing those is the caller's. A table
     * whose summary is zero is released here, as soon as it is counted.
     */
-  def compareAll(parallelism: Int = Runtime.getRuntime.availableProcessors().min(8)): DriftResult = {
-    import scala.concurrent._
-    import scala.concurrent.duration._
-    val shared = sharedTables()
-    val schema = shared.flatMap(schemaDrift)
-    val missing = missingTableDrift()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(parallelism, 1))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val drifted =
-      try {
-        val futs = shared.map { t =>
-          Future {
-            dataDrift(t).flatMap { df =>
-              val cached = df.persist()
-              val s = summarize(t, cached)
-              if (s.rowsOnlyInDb1 + s.rowsOnlyInDb2 > 0) Some((t, cached, s))
-              else { cached.unpersist(); None }
-            }
-          }
+  def compareAll(parallelism: Int = DriftCompare.poolWidth): DriftResult = {
+    val (t1, t2) = listSelected()
+    val persisted = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    val perTable =
+      try DriftCompare.inPool(shared(t1, t2), parallelism) { t =>
+        val schema = schemaDrift(t)
+        val drifted = dataDrift(t).flatMap { df =>
+          val cached = df.persist()
+          persisted.add(cached)
+          val s = summarize(t, cached)
+          if (s.rowsOnlyInDb1 + s.rowsOnlyInDb2 > 0) Some((t, cached, s))
+          else { cached.unpersist(); None }
         }
-        Await.result(Future.sequence(futs), 24.hours).flatten
-      } finally pool.shutdown()
+        (schema, drifted)
+      } catch { case e: Throwable => persisted.forEach(_.unpersist()); throw e }
+    val drifted = perTable.flatMap(_._2)
     DriftResult(
-      schemaDrift = schema,
-      missingTables = missing,
+      schemaDrift = perTable.flatMap(_._1),
+      missingTables = missing(t1, t2),
       dataDrift = drifted.map { case (t, df, _) => t -> df }.toMap,
       summary = drifted.map(_._3))
+  }
+}
+
+object DriftCompare {
+
+  /** Width of the table pool: one thread per core, at most eight. */
+  val poolWidth: Int = Runtime.getRuntime.availableProcessors().min(8)
+
+  /** `f` over `xs` on a pool of at most `width` threads, results in `xs`
+    * order. Waits for every task; if any threw, rethrows the exception of
+    * the first in `xs` order.
+    */
+  private[operators] def inPool[A, B](xs: Seq[A], width: Int)(f: A => B): Seq[B] = {
+    import scala.jdk.CollectionConverters._
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(width.min(xs.size).max(1))
+    try {
+      val tasks = xs.map(x => (() => f(x)): java.util.concurrent.Callable[B])
+      pool.invokeAll(tasks.asJava).asScala.toSeq.map { fut =>
+        try fut.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
+    } finally pool.shutdown()
   }
 }
 
@@ -422,17 +451,18 @@ object DriftOutput {
   /** Write the whole result as a directory of Parquet tables: one per
     * drifted table plus the three summary tables — the Spark analog of the
     * reference's result DuckDB file (reference: lotad/data_analysis.py:143-168).
+    * Each table goes to its own directory, so all of them are written
+    * concurrently on the table pool; the first write that throws fails
+    * the call, after the others have finished.
     */
   def write(spark: SparkSession, result: DriftResult, outDir: String): Unit = {
-    result.dataDrift.foreach { case (t, df) =>
-      df.write.mode("overwrite").parquet(s"$outDir/$t")
+    val tables = result.dataDrift.toSeq ++ Seq(
+      "lotad_table_schema_drift" -> schemaDriftDf(spark, result.schemaDrift),
+      "lotad_missing_table_drift" -> missingTablesDf(spark, result.missingTables),
+      "lotad_db_data_drift_summary" -> summaryDf(spark, result.summary))
+    DriftCompare.inPool(tables, DriftCompare.poolWidth) { case (name, df) =>
+      df.write.mode("overwrite").parquet(s"$outDir/$name")
     }
-    schemaDriftDf(spark, result.schemaDrift).write.mode("overwrite")
-      .parquet(s"$outDir/lotad_table_schema_drift")
-    missingTablesDf(spark, result.missingTables).write.mode("overwrite")
-      .parquet(s"$outDir/lotad_missing_table_drift")
-    summaryDf(spark, result.summary).write.mode("overwrite")
-      .parquet(s"$outDir/lotad_db_data_drift_summary")
   }
 
   /** Text report, byte-identical to the reference's Jinja rendering

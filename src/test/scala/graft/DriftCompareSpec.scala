@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators._
-import graft.sources.MemorySide
+import graft.sources.{MemorySide, Side}
 import graft.types.TypeRender
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -229,6 +229,82 @@ class DriftCompareSpec extends SparkSpecBase {
       assert(r.dataDrift.keySet == Set("drifted"))
       assert(spark.sparkContext.getPersistentRDDs.size == before + 1)
     } finally r.dataDrift.values.foreach(_.unpersist())
+  }
+
+  /** A side that counts its listings and can fail one table's schema. */
+  private class CountingSide(inner: MemorySide, brokenSchema: Option[String] = None) extends Side {
+    val listings = new java.util.concurrent.atomic.AtomicInteger()
+    override def id: String = inner.id
+    override def listTables(): Seq[String] = { listings.incrementAndGet(); inner.listTables() }
+    override def table(name: String): DataFrame = inner.table(name)
+    override def schema(name: String) =
+      if (brokenSchema.contains(name)) throw new IllegalStateException(s"no schema for $name")
+      else inner.schema(name)
+  }
+
+  test("compareAll lists each side once") {
+    val s1 = new CountingSide(MemorySide("db1", Map("t" -> base(), "only1" -> base())))
+    val s2 = new CountingSide(MemorySide("db2", Map("t" -> base())))
+    val r = new DriftCompare(spark, s1, s2).compareAll(parallelism = 2)
+    assert(r.missingTables == Seq(MissingTableRow("only1", "db1", "db2")))
+    assert((s1.listings.get, s2.listings.get) == ((1, 1)))
+  }
+
+  test("compareAll rethrows a table's failure and releases what it persisted") {
+    // rows no other spec uses, so no cached plan is shared with this one
+    val rows = Seq((21L, "fail-a"), (22L, "fail-b")).toDF("id", "v")
+    val tables = Map("a" -> rows.filter($"id" =!= 22L), "b" -> rows, "c" -> rows.filter($"id" =!= 21L))
+    val c = new DriftCompare(spark,
+      new CountingSide(MemorySide("db1", tables), brokenSchema = Some("b")),
+      MemorySide("db2", tables.map { case (t, _) => t -> rows }))
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val e = intercept[IllegalStateException](c.compareAll(parallelism = 3))
+    assert(e.getMessage == "no schema for b")
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
+  }
+
+  test("DriftOutput.write rethrows a failing table write after the others finish") {
+    val out = java.nio.file.Files.createTempDirectory("driftfail")
+    val bad = Seq(1L).toDF("id").select(raise_error(lit("unwritable")).cast("long").as("id"))
+    val r = DriftResult(Nil, Nil, Map("ok" -> Seq(1L).toDF("id"), "bad" -> bad), Nil)
+    val e = intercept[Exception](DriftOutput.write(spark, r, out.toString))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage).contains("unwritable")))
+    for (t <- Seq("ok", "lotad_table_schema_drift", "lotad_missing_table_drift",
+        "lotad_db_data_drift_summary"))
+      assert(java.nio.file.Files.exists(out.resolve(t).resolve("_SUCCESS")), t)
+  }
+
+  test("compareAll -> write -> re-read on degenerate tables") {
+    // rows no other spec uses, so no cached plan is shared with this one
+    val kv = Seq((31L, "deg-a"), (32L, "deg-b")).toDF("id", "v")
+    val nulls = Seq(31L, 32L, 33L).toDF("id")
+    val db1 = Map(
+      "empty" -> kv.limit(0), // no rows on db1
+      "nulls" -> nulls.withColumn("n", lit(null).cast("int")),
+      "dups" -> kv.union(kv), // every row twice on db1 only
+      "same" -> kv)
+    val db2 = Map(
+      "empty" -> kv,
+      "nulls" -> nulls.filter($"id" =!= 33L).withColumn("n", lit(null).cast("string")),
+      "dups" -> kv,
+      "same" -> kv)
+    val r = new DriftCompare(spark, MemorySide("db1", db1), MemorySide("db2", db2))
+      .compareAll(parallelism = 2)
+    val out = java.nio.file.Files.createTempDirectory("driftdeg")
+    try DriftOutput.write(spark, r, out.toString)
+    finally r.dataDrift.values.foreach(_.unpersist())
+    def read(t: String) = spark.read.parquet(out.resolve(t).toString)
+    assert(read("lotad_db_data_drift_summary").as[(String, String, Long, String, Long)]
+      .collect().toSeq == Seq(("empty", "db1", 0L, "db2", 2L), ("nulls", "db1", 1L, "db2", 0L)))
+    assert(read("lotad_table_schema_drift").collect().toSeq.map(_.toSeq) ==
+      Seq(Seq("\"nulls\"", "\"n\"", "\"db1\"", "\"INTEGER\"", "\"db2\"", "\"VARCHAR\"")))
+    assert(read("lotad_missing_table_drift").count() == 0)
+    assert(read("empty").select("id", "v", "observed_in").as[(Long, String, String)]
+      .collect().toSet == Set((31L, "deg-a", "db2"), (32L, "deg-b", "db2")))
+    val nullRow = read("nulls").select("id", "n", "observed_in").collect().toSeq
+    assert(nullRow.map(_.toSeq) == Seq(Seq(33L, null, "db1")))
+    for (t <- Seq("dups", "same")) assert(!java.nio.file.Files.exists(out.resolve(t)), t)
   }
 
   test("summaryDf drift counts are LongType (no 2^31 overflow) and survive > Int.MaxValue") {
