@@ -1,5 +1,6 @@
 package graft
 
+import graft.RootFormat._
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
@@ -15,7 +16,6 @@ object Bench {
     val spark = GraftSession.builder("graft-bench", cpus)
       .master(s"local[$cpus]")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // uncounted warmup: JIT/codegen + parquet footer reads, not query work
     spark.range(1000000L).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).collect()
@@ -85,7 +85,7 @@ object Bench {
         val ts = samples(name).sorted
         name -> ts(ts.length / 2)
       }
-      val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+      val qs = results.map { case (k, v) => "\"" + k + "\":" + rf"$v%.3f" }
         .mkString("{", ",", "}")
       val total = results.map(_._2).sum
       // min-of-rounds published alongside the median: single runs on this
@@ -93,17 +93,17 @@ object Bench {
       // a per-query median >> min flags noise, not a plan regression — the
       // artifact self-documents which spikes to distrust
       val mins = names.map { case (name, _) => name -> samples(name).min }
-      val qsMin = mins.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+      val qsMin = mins.map { case (k, v) => "\"" + k + "\":" + rf"$v%.3f" }
         .mkString("{", ",", "}")
       val totalMin = mins.map(_._2).sum
       // full per-query sample lists (newest-first) so a future reader can
       // adjudicate noise vs regression from the artifact alone
       val qsSamples = names.map { case (name, _) =>
         "\"" + name + "\":[" +
-          samples(name).map(t => f"$t%.3f").mkString(",") + "]"
+          samples(name).map(t => rf"$t%.3f").mkString(",") + "]"
       }.mkString("{", ",", "}")
-      val loadRounds = loadPerRound.map(l => f"$l%.2f").mkString("[", ",", "]")
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"value_min":$totalMin%.3f,"queries_min":$qsMin,"samples":$qsSamples,"sf":"$sfDir","rounds":$roundsDone,"load_avg_before":$loadBefore%.2f,"load_avg_after":$loadNow%.2f,"load_per_round":$loadRounds,"settle_sec":$settleSec%.1f}"""
+      val loadRounds = loadPerRound.map(l => rf"$l%.2f").mkString("[", ",", "]")
+      rf"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"value_min":$totalMin%.3f,"queries_min":$qsMin,"samples":$qsSamples,"sf":"$sfDir","rounds":$roundsDone,"load_avg_before":$loadBefore%.2f,"load_avg_after":$loadNow%.2f,"load_per_round":$loadRounds,"settle_sec":$settleSec%.1f}"""
     }
     // written after EVERY round (not just at exit): a harness that kills
     // a long multi-round run still finds the last completed round's
@@ -130,10 +130,10 @@ object Bench {
       val top = mins.sortBy(-_._2).take(20).map(_._1).toSet
       def m(kv: Seq[(String, Double)]): String = kv
         .filter { case (k, _) => top.contains(k) }
-        .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+        .map { case (k, v) => "\"" + k + "\":" + rf"$v%.3f" }
         .mkString("{", ",", "}")
-      val loadRounds = loadPerRound.map(l => f"$l%.2f").mkString("[", ",", "]")
-      f"""{"metric":"total","value":${med.map(_._2).sum}%.3f,"unit":"sec","queries":${m(med)},"value_min":${mins.map(_._2).sum}%.3f,"queries_min":${m(mins)},"n_queries":${names.length},"top":20,"full_map":"$outPath","sf":"$sfDir","rounds":$roundsDone,"load_avg_before":$loadBefore%.2f,"load_avg_after":$loadNow%.2f,"load_per_round":$loadRounds,"settle_sec":$settleSec%.1f}"""
+      val loadRounds = loadPerRound.map(l => rf"$l%.2f").mkString("[", ",", "]")
+      rf"""{"metric":"total","value":${med.map(_._2).sum}%.3f,"unit":"sec","queries":${m(med)},"value_min":${mins.map(_._2).sum}%.3f,"queries_min":${m(mins)},"n_queries":${names.length},"top":20,"full_map":"$outPath","sf":"$sfDir","rounds":$roundsDone,"load_avg_before":$loadBefore%.2f,"load_avg_after":$loadNow%.2f,"load_per_round":$loadRounds,"settle_sec":$settleSec%.1f}"""
     }
     while (round < runs && {
       val elapsed = (System.nanoTime() - benchStart) / 1e9

@@ -22,7 +22,6 @@ object ExplainQ {
     val spark = GraftSession.builder("graft-explain", cpus)
       .master(s"local[$cpus]")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

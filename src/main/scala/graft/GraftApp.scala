@@ -2,8 +2,9 @@ package graft
 
 import scala.collection.immutable.ListMap
 
+import graft.RootFormat._
 import graft.config.{GraftConfig, SideDetails}
-import graft.operators.{DriftCompare, DriftOutput}
+import graft.operators.{DriftCompare, DriftOutput, Materialize}
 import graft.sources.Side
 
 import org.apache.spark.sql.SparkSession
@@ -86,7 +87,7 @@ object GraftApp {
       .write.mode("overwrite").parquet(s"$out/cell_drift.parquet")
     val topCells = spark.read.parquet(s"$out/cell_drift.parquet")
       .orderBy(col("psi_term").desc).limit(3).collect()
-      .map(r => f"cell=${r.getLong(0)} psi=${r.getDouble(5)}%.6f")
+      .map(r => rf"cell=${r.getLong(0)} psi=${r.getDouble(5)}%.6f")
     // --match-cells: the independent-quantizer path — fit a SECOND
     // quantizer on db2 alone, align the two codebooks
     // (Similarity.cellMatching) and score how much the partition
@@ -103,7 +104,7 @@ object GraftApp {
       val agree = graft.operators.Similarity
         .clusterAgreement(db1, vecCol, cents, cents2).head()
       val fmt = (i: Int) =>
-        if (agree.isNullAt(i)) "null" else f"${agree.getDouble(i)}%.6f"
+        if (agree.isNullAt(i)) "null" else rf"${agree.getDouble(i)}%.6f"
       s" cell_match_ari=${fmt(1)} cell_match_nmi=${fmt(2)}"
     }
     // --pq-codebooks: the compression-layer axis — per-subspace mean
@@ -132,7 +133,7 @@ object GraftApp {
         else if (c == 0) 1.0
         else Double.PositiveInfinity
       }
-      f" pq_stale_max=${ratios.max}%.3f pq_subspaces=${ratios.length}"
+      rf" pq_stale_max=${ratios.max}%.3f pq_subspaces=${ratios.length}"
     }
     // NULL mmd2 can still reach here via a degenerate null split
     // (single-row db1 -> one split side empty): render NaN, not a throw
@@ -142,8 +143,8 @@ object GraftApp {
       .toMap
     val (n1, n2, m) = rows("db1-vs-db2")
     val (_, _, f) = rows("db1-null-split")
-    f"embdrift: mmd2=$m%.9f null_floor=$f%.9f " +
-      f"ratio=${if (f > 0) m / f else Double.PositiveInfinity}%.1f " +
+    rf"embdrift: mmd2=$m%.9f null_floor=$f%.9f " +
+      rf"ratio=${if (f > 0) m / f else Double.PositiveInfinity}%.1f " +
       s"n1=$n1 n2=$n2 features=$nFeat sigma=$sigma " +
       s"top_cells=[${topCells.mkString(", ")}]$matchLine$pqLine -> $out"
   }
@@ -213,8 +214,8 @@ object GraftApp {
     kept.write.mode("overwrite").parquet(s"$out/deduped.parquet")
     val nKept = spark.read.parquet(s"$out/deduped.parquet").count()
     val nIn = corpus.count()
-    f"semdedup (cos >= $minCos): kept=$nKept of $nIn " +
-      f"(dropped=${nIn - nKept}, ${100.0 * (nIn - nKept) / math.max(nIn, 1L)}%.2f%%) -> $out"
+    rf"semdedup (cos >= $minCos): kept=$nKept of $nIn " +
+      rf"(dropped=${nIn - nKept}, ${100.0 * (nIn - nKept) / math.max(nIn, 1L)}%.2f%%) -> $out"
   }
 
   /** The `graft semindex` body, session passed in so specs can drive
@@ -264,8 +265,8 @@ object GraftApp {
         if (ingest)
           SemanticIndex.append(
             spark.read.parquet(s"$out/deduped.parquet"), idCol, vecCol, index)
-        f"semindex dedup (cos >= $minCos): kept=$nKept of $nIn " +
-          f"(dropped=${nIn - nKept})" +
+        rf"semindex dedup (cos >= $minCos): kept=$nKept of $nIn " +
+          rf"(dropped=${nIn - nKept})" +
           (if (ingest) s", survivors ingested into $index" else "") +
           s" -> $out"
       case other =>
@@ -294,13 +295,11 @@ object GraftApp {
         (element_at(col("embedding"), 1) > 0f).cast("double").as("y"))
     val w = graft.operators.Classifier.fitLogistic(emb, "x", "y",
       iters = 30, lr = 5.0)
-    val scored = graft.operators.Classifier
+    Materialize.within(graft.operators.Classifier
       .predictLogistic(emb, "vec_id", "x", w)
       .join(emb.select(col("vec_id"), col("group"), col("y")), "vec_id")
       .select(col("vec_id"), col("group"), col("y"),
-        round(lit(1.0) / (lit(1.0) + exp(-col("margin"))), 6).as("score"))
-      .persist()
-    try {
+        round(lit(1.0) / (lit(1.0) + exp(-col("margin"))), 6).as("score"))) { scored =>
       scored.count()
       val label = col("y") === 1.0
       graft.operators.Eval.calibration(scored, "score", label)
@@ -337,7 +336,7 @@ object GraftApp {
           .mkString("{\n", ",\n", "\n}\n")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       manifest
-    } finally scored.unpersist(blocking = false)
+    }
   }
 
   /** The `classify` subcommand body, factored for direct spec drive:
@@ -363,7 +362,7 @@ object GraftApp {
       val rows = summary.collect() // bounded: one row per class
       Map("n_scored" -> rows.map(_.getAs[Long]("n")).sum.toString,
         "n_classes" -> rows.length.toString)
-    } finally graft.operators.Sampling.release(model)
+    } finally Materialize.release(model)
   }
 
   /** A subcommand: parses its options first, so a missing one fails
@@ -436,7 +435,7 @@ object GraftApp {
         val docs = Tables.t(spark, input, "documents")
         val res = graft.operators.Curation.incremental(docs, index, p)
         res.stages.foreach { s =>
-          println(f"${s.stage}%-20s in=${s.rowsIn}%-8d out=${s.rowsOut}%-8d " +
+          println(rf"${s.stage}%-20s in=${s.rowsIn}%-8d out=${s.rowsOut}%-8d " +
             s"dropped=${s.dropped}")
         }
         println(if (res.bootstrapped) s"bootstrapped new index at $index"
@@ -464,7 +463,7 @@ object GraftApp {
         val docs = Tables.t(spark, input, "documents")
         val res = graft.operators.Curation.run(docs, p)
         res.stages.foreach { s =>
-          println(f"${s.stage}%-20s in=${s.rowsIn}%-8d out=${s.rowsOut}%-8d " +
+          println(rf"${s.stage}%-20s in=${s.rowsIn}%-8d out=${s.rowsOut}%-8d " +
             s"dropped=${s.dropped}")
         }
         println(s"packed into ${res.nSequences} sequences of <= ${p.maxSeqTokens} tokens")
@@ -804,7 +803,7 @@ object GraftApp {
           }
           def d6(v: Any): String = v match {
             case null => "null"
-            case x: java.lang.Double => f"$x%.6f"
+            case x: java.lang.Double => rf"$x%.6f"
             case x => x.toString
           }
           val srmRow = r.srm.head()
@@ -870,8 +869,8 @@ object GraftApp {
         DriftOutput.write(spark, result, config.outputPath)
         println(DriftOutput.report(result))
       } finally result.dataDrift.values.foreach(_.unpersist())
-      println("completed in %.1f sec; results in %s".formatLocal(java.util.Locale.ROOT,
-        (System.nanoTime() - t0) / 1e9, config.outputPath))
+      println(rf"completed in ${(System.nanoTime() - t0) / 1e9}%.1f sec; " +
+        s"results in ${config.outputPath}")
     },
     "suggest-ignores" -> onSides { (spark, s1, s2, config, _) =>
       suggestIgnores(spark, s1, s2, config).foreach(println)
@@ -886,8 +885,8 @@ object GraftApp {
         val prof = if (exact) graft.operators.Profile.profileExact(df)
                    else graft.operators.Profile.profileApprox(df)
         prof.orderBy("col_name").collect().foreach { r =>
-          println(f"${r.getString(0)}%-24s rows=${r.getLong(1)}%-9d " +
-            f"nulls=${r.getLong(2)}%-7d ndv=${r.getLong(3)}%-9d " +
+          println(rf"${r.getString(0)}%-24s rows=${r.getLong(1)}%-9d " +
+            rf"nulls=${r.getLong(2)}%-7d ndv=${r.getLong(3)}%-9d " +
             s"min=${r.getString(4)} max=${r.getString(5)}")
         }
       }
@@ -906,7 +905,7 @@ object GraftApp {
       kept.write.mode("overwrite").parquet(s"$out/$table")
       val nKept = spark.read.parquet(s"$out/$table").count()
       println(s"dedup: $table $total rows -> $nKept kept " +
-        f"(${100.0 * (total - nKept) / math.max(total, 1)}%.1f%% removed) at " +
+        rf"(${100.0 * (total - nKept) / math.max(total, 1)}%.1f%% removed) at " +
         s"jaccard >= $threshold; output in $out/$table")
     },
     "overlap" -> onSides { (_, s1, s2, _, opts) =>
@@ -919,11 +918,11 @@ object GraftApp {
         .overlap(s1.table(table), s2.table(table), keyCol)
         .collect()(0)
       println(s"overlap[$table.$keyCol] " +
-        f"db1~${est.getAs[Double]("est_a")}%.0f " +
-        f"db2~${est.getAs[Double]("est_b")}%.0f " +
-        f"union~${est.getAs[Double]("est_union")}%.0f " +
-        f"intersect~${est.getAs[Double]("est_intersect")}%.0f " +
-        f"jaccard~${est.getAs[Double]("jaccard_est")}%.4f")
+        rf"db1~${est.getAs[Double]("est_a")}%.0f " +
+        rf"db2~${est.getAs[Double]("est_b")}%.0f " +
+        rf"union~${est.getAs[Double]("est_union")}%.0f " +
+        rf"intersect~${est.getAs[Double]("est_intersect")}%.0f " +
+        rf"jaccard~${est.getAs[Double]("jaccard_est")}%.4f")
       if (opts.get("exact").exists(_.toBoolean)) {
         val exact = s1.table(table).select(keyCol)
           .intersect(s2.table(table).select(keyCol)).count()
@@ -941,7 +940,7 @@ object GraftApp {
         compare.distributionDrift(table, nBins) match {
           case None => println(s"psi[$table] no shared numeric columns")
           case Some(df) => df.orderBy("col_name").collect().foreach { r =>
-            println(f"psi[$table.${r.getString(0)}] ${r.getDouble(1)}%.6f " +
+            println(rf"psi[$table.${r.getString(0)}] ${r.getDouble(1)}%.6f " +
               s"(n1=${r.getLong(2)} n2=${r.getLong(3)})")
           }
         }
@@ -976,8 +975,8 @@ object GraftApp {
               "out-of-range side; n1=" + r.getAs[Long]("n1") +
               " n2=" + r.getAs[Long]("n2") + ")")
           else
-            println(f"ks[$table.$name] d=${r.getAs[Double]("d")}%.6f " +
-              f"p~${r.getAs[Double]("p_approx")}%.6f " +
+            println(rf"ks[$table.$name] d=${r.getAs[Double]("d")}%.6f " +
+              rf"p~${r.getAs[Double]("p_approx")}%.6f " +
               s"(n1=${r.getAs[Long]("n1")} n2=${r.getAs[Long]("n2")})")
         }
       }
@@ -993,7 +992,6 @@ object GraftApp {
       s"unknown command: $cmd (expected ${commands.keys.mkString(" | ")})"))
     val body = run(parseArgs(args.drop(1)))
     val spark = buildSession()
-    spark.sparkContext.setLogLevel("WARN")
     try body(spark) finally spark.stop()
   }
 

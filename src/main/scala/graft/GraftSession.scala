@@ -65,4 +65,6 @@ object GraftSession {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // set before the context starts, so its INFO startup lines never print
+      .config("spark.log.level", "WARN")
 }

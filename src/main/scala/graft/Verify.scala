@@ -12,7 +12,6 @@ object Verify {
     val spark = GraftSession.builder("graft-verify", cpus)
       .master(s"local[$cpus]")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // A thrown query must become a red row, never a silent omission: the
     // query's output dir is deleted BEFORE execution (so a stale result

@@ -61,11 +61,9 @@ object Classifier {
                   iters: Int = 30, lr: Double = 5.0,
                   tol: Double = 1e-4): Array[Double] = {
     require(iters >= 1 && lr > 0, "iters >= 1, lr > 0")
-    val feats = df
+    Materialize.within(df
       .select(col(vecCol).cast("array<double>").as("_x"),
-        col(labelCol).cast("double").as("_y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+        col(labelCol).cast("double").as("_y"))) { feats =>
       val dim = feats.select(size(col("_x"))).head().getInt(0)
       var w = new Array[Double](dim + 1)
       var it = 0
@@ -107,7 +105,7 @@ object Classifier {
         it += 1
       }
       w
-    } finally { feats.unpersist(); () }
+    }
   }
 
   /** Narrow scoring pass: (idCol, margin, pred) with pred = margin > 0. */
@@ -134,12 +132,10 @@ object Classifier {
                 maxCandidates: Long = 100000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val v = col(featureCol).cast("double")
-    val cells = df.filter(v.isNotNull)
+    Materialize.within(df.filter(v.isNotNull)
       .groupBy(v.as("_v"))
       .agg(count(lit(1)).as("_c"),
-        sum(when(label, 1L).otherwise(0L)).as("_p"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+        sum(when(label, 1L).otherwise(0L)).as("_p"))) { cells =>
       val g = cells.agg(count(lit(1)).as("k"), sum("_c").as("n"),
         sum("_p").as("p")).head()
       val (k, n, p) = (g.getLong(0), g.getLong(1), g.getLong(2))
@@ -179,7 +175,7 @@ object Classifier {
           .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue))
         .toDF("split_value", "n_left", "n_right", "gini_split",
           "gini_base", "gini_gain")
-    } finally { cells.unpersist(blocking = false) }
+    }
   }
 
   /** Multinomial Naive Bayes over word tokens — fit. The categorical
@@ -190,7 +186,7 @@ object Classifier {
     * plus one default row per label (term NULL) carrying the
     * unseen-token log-probability and the label's log-prior. The model
     * is vocab×labels-sized — it stays distributed (localCheckpoint'ed,
-    * never collected); release with [[Sampling.release]] when done.
+    * never collected); release with [[Materialize.release]] when done.
     *
     * Engine replay: every log quantizes at 9 dp; counts, the vocabulary
     * size, and doc totals are exact integers riding as one-row
@@ -205,11 +201,9 @@ object Classifier {
     val base = df.filter(col(labelCol).isNotNull && col(textCol).isNotNull)
       .select(col(labelCol).cast("string").as("label"),
         col(textCol).as("_txt"))
-    val tc = base
+    Materialize.within(base
       .select(col("label"), explode(TextAnalysis.tokens(col("_txt"))).as("term"))
-      .groupBy("label", "term").agg(count(lit(1)).as("_c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      .groupBy("label", "term").agg(count(lit(1)).as("_c"))) { tc =>
       val nl = tc.groupBy("label").agg(sum("_c").as("_n"))
       val vc = tc.agg(countDistinct(col("term")).as("_v"))
       val priors = base.groupBy("label").agg(count(lit(1)).as("_docs"))
@@ -236,7 +230,7 @@ object Classifier {
           round(log(col("_docs").cast("double") /
             col("_tot").cast("double")), 9).as("log_prior"))
       seen.unionByName(defaults).localCheckpoint(eager = true)
-    } finally tc.unpersist(blocking = false)
+    }
   }
 
   /** Multinomial Naive Bayes — score + argmax. Each document's class

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** End-to-end training-corpus curation: the composed pipeline every
   * individually-oracled stage exists for, run as ONE flow with a
@@ -85,14 +84,14 @@ object Curation {
 
     // 2. quality + language gate
     val scored = qualityGate(pool, p)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist()
     val n2 = scored.count()
     stages += Stage("quality_lang_gate", n1, n2)
 
     // 3. staged near-dup removal
     val deduped = Dedup.dedupCorpus(scored, "text", "doc_id",
         p.dedupThreshold)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist()
     val n3 = deduped.count()
     scored.unpersist(blocking = false)
     stages += Stage("dedup", n2, n3)
@@ -102,7 +101,7 @@ object Curation {
         "text", "doc_id", "text")
       .filter(col("n_shared") >= p.minShared).select("doc_id")
     val clean = deduped.join(contaminatedIds, Seq("doc_id"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist()
     val n4 = clean.count()
     deduped.unpersist(blocking = false)
     stages += Stage("decontaminate", n3, n4)
@@ -117,16 +116,16 @@ object Curation {
       .join(winners.select(col("doc_id"), col("cum_tokens")), Seq("doc_id"))
       .withColumn("split", TextAnalysis.hashSplit(col("doc_id")))
       .drop("component")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist()
     val n5 = curated.count()
-    Sampling.release(winners) // checkpoint blocks free once winners joined
+    Materialize.release(winners) // checkpoint blocks free once winners joined
     clean.unpersist(blocking = false)
     stages += Stage("domain_budget", n4, n5)
 
     // 6. greedy sequence packing per split
     val packed = TextAnalysis.packByCount(curated, "split", "doc_id",
         "n_tokens", p.maxSeqTokens)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist()
     val nPackedRows = packed.count()
     stages += Stage("pack", n5, nPackedRows)
     val nSeq = packed.select(countDistinct(concat_ws("#",
@@ -174,14 +173,14 @@ object Curation {
     val stages = scala.collection.mutable.ArrayBuffer.empty[Stage]
     val total = batch.count()
 
-    val scored = qualityGate(batch, p).persist(StorageLevel.MEMORY_AND_DISK)
+    val scored = qualityGate(batch, p).persist()
     val n1 = scored.count()
     stages += Stage("quality_lang_gate", total, n1)
 
     val deduped = Dedup.dedupCorpus(scored, "text", "doc_id",
         p.dedupThreshold)
       .drop("component")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist()
     val n2 = deduped.count()
     scored.unpersist(blocking = false)
     stages += Stage("batch_dedup", n1, n2)
@@ -196,7 +195,7 @@ object Curation {
           p.dedupThreshold, idx)
         deduped.join(verdicts.filter(col("is_novel"))
           .select(col("new_id").as("doc_id")), Seq("doc_id"))
-      }).persist(StorageLevel.MEMORY_AND_DISK)
+      }).persist()
     val n3 = novel.count()
     stages += Stage("index_dedup", n2, n3)
 

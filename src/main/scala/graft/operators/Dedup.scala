@@ -666,13 +666,9 @@ object Dedup {
       val updated = jumped.localCheckpoint(eager = true)
       val changed = updated.join(labels.withColumnRenamed("component", "old"), Seq("id"))
         .filter(col("component") < col("old")).limit(1).count()
-      // leaf-only unpersist (same discipline as Graph.unpersistCheckpoint):
-      // a lineage walk could reach and drop the still-needed `edges` cache
-      labels.queryExecution.logical.foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
+      // the walk stops at the eager checkpoint, so the still-needed
+      // `edges` cache survives
+      Materialize.release(labels)
       labels = updated
       converged = changed == 0
       iter += 1

@@ -104,12 +104,16 @@ final class DriftCompare(
     missing(t1, t2)
   }
 
-  private def effectiveSchema(side: Side, table: String): Seq[StructField] = {
+  /** `fields` without `table`'s ignore-columns and, under `ignoreDates`, date-like ones. */
+  private def keptFields(table: String, fields: Seq[StructField]): Seq[StructField] = {
     val ignores = config.rules(table).ignoreColumns.map(_.toLowerCase)
-    side.schema(table).fields.toSeq
+    fields
       .filterNot(f => ignores.contains(f.name.toLowerCase))
       .filterNot(f => config.ignoreDates && TypeRender.isDateLike(f.dataType))
   }
+
+  private def effectiveSchema(side: Side, table: String): Seq[StructField] =
+    keptFields(table, side.schema(table).fields.toSeq)
 
   /** Column-level drift for one shared table: columns missing on one side
     * or type-inequivalent after generic-type normalization
@@ -151,19 +155,35 @@ final class DriftCompare(
     (proj(df1, f1, f2), proj(df2, f2, f1))
   }
 
-  private def dropIgnored(df: DataFrame, table: String): DataFrame = {
-    val ignores = config.rules(table).ignoreColumns.map(_.toLowerCase)
-    val keep = df.schema.fields
-      .filterNot(f => ignores.contains(f.name.toLowerCase))
-      .filterNot(f => config.ignoreDates && TypeRender.isDateLike(f.dataType))
-    df.select(keep.map(f => col(s"`${f.name}`")): _*)
+  /** Each side's input for `table` (its custom query, else the table),
+    * resolved once per side, with the ignored columns dropped.
+    */
+  private def inputs(table: String): (DataFrame, DataFrame) = {
+    def input(side: Side): DataFrame = {
+      val df = config.rules(table).customQuery match {
+        case Some(q) => runCustomQuery(side, q)
+        case None => side.table(table)
+      }
+      df.select(keptFields(table, df.schema.fields.toSeq).map(f => col(s"`${f.name}`")): _*)
+    }
+    (input(side1), input(side2))
   }
 
-  private def sideInput(side: Side, table: String): DataFrame =
-    config.rules(table).customQuery match {
-      case Some(q) => runCustomQuery(side, q)
-      case None => side.table(table)
-    }
+  /** Both sides' [[normalizedProjection]]s of `table`; None when they share no column. */
+  private def projected(table: String): Option[(DataFrame, DataFrame)] = {
+    val (in1, in2) = inputs(table)
+    val (p1, p2) = normalizedProjection(in1, in2)
+    if (p1.schema.isEmpty) None else Some((p1, p2))
+  }
+
+  /** The union of both projections, each row tagged with `observed_in` and `hashed_row`. */
+  private def tagged(p1: DataFrame, p2: DataFrame): DataFrame = {
+    val cols = p1.columns
+    def tag(df: DataFrame, id: String) = df
+      .withColumn("observed_in", lit(id))
+      .withColumn("hashed_row", CanonicalRowHash(struct(cols.map(c => col(s"`$c`")): _*)))
+    tag(p1, side1.id).unionByName(tag(p2, side2.id))
+  }
 
   /** Run a user query against one side: every table of the side is exposed
     * as a temp view, then plain `spark.sql` — no string rewriting, unlike
@@ -187,23 +207,14 @@ final class DriftCompare(
     * Returns None when the sides share no columns
     * (reference: lotad/db_compare.py:337-339).
     */
-  def dataDrift(table: String): Option[DataFrame] = {
-    val in1 = dropIgnored(sideInput(side1, table), table)
-    val in2 = dropIgnored(sideInput(side2, table), table)
-    val (p1, p2) = normalizedProjection(in1, in2)
-    if (p1.schema.isEmpty) return None
-    val cols = p1.columns
-    def tag(df: DataFrame, id: String) = df
-      .withColumn("observed_in", lit(id))
-      .withColumn("hashed_row", CanonicalRowHash(struct(cols.map(c => col(s"`$c`")): _*)))
+  def dataDrift(table: String): Option[DataFrame] =
     // Single-pass plan: each side is scanned and hashed exactly once, the
     // union shuffles once on hashed_row, and a streaming run-scan emits
     // single-side runs. This beats the dual anti-join formulation (which
     // reads and hashes every side twice — once as full left, once as the
     // hash-only build) and needs no trailing dropDuplicates shuffle: the
     // run-scan dedups as it goes.
-    Some(HashRunScan(tag(p1, side1.id).unionByName(tag(p2, side2.id))))
-  }
+    projected(table).map { case (p1, p2) => HashRunScan(tagged(p1, p2)) }
 
   /** Drift localization extension (not in the reference): roll the
     * [[dataDrift]] rows up into key-range buckets — (bucket_lo,
@@ -238,8 +249,7 @@ final class DriftCompare(
     * date-excluded columns are dropped first, like every other compare.
     */
   def distributionDrift(table: String, nBins: Int = 10): Option[DataFrame] = {
-    val in1 = dropIgnored(sideInput(side1, table), table)
-    val in2 = dropIgnored(sideInput(side2, table), table)
+    val (in1, in2) = inputs(table)
     val numeric = in1.schema.fields
       .filter(_.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
       .map(_.name)
@@ -258,22 +268,16 @@ final class DriftCompare(
     * per-side counts. One hash-aggregate shuffle; grouping includes the
     * raw columns so hash collisions cannot merge distinct rows.
     */
-  def dataDriftBag(table: String): Option[DataFrame] = {
-    val in1 = dropIgnored(sideInput(side1, table), table)
-    val in2 = dropIgnored(sideInput(side2, table), table)
-    val (p1, p2) = normalizedProjection(in1, in2)
-    if (p1.schema.isEmpty) return None
-    val cols = p1.columns
-    def tag(df: DataFrame, id: String) = df.withColumn("observed_in", lit(id))
-    val u = tag(p1, side1.id).unionByName(tag(p2, side2.id))
-      .withColumn("hashed_row", CanonicalRowHash(struct(cols.map(c => col(s"`$c`")): _*)))
-    Some(u
-      .groupBy((cols.map(c => col(s"`$c`")) :+ col("hashed_row")): _*)
+  def dataDriftBag(table: String): Option[DataFrame] =
+    projected(table).map { case (p1, p2) => bag(p1, p2) }
+
+  private def bag(p1: DataFrame, p2: DataFrame): DataFrame =
+    tagged(p1, p2)
+      .groupBy((p1.columns.map(c => col(s"`$c`")) :+ col("hashed_row")): _*)
       .agg(
         count(when(col("observed_in") === side1.id, 1)).as("n_db1"),
         count(when(col("observed_in") === side2.id, 1)).as("n_db2"))
-      .filter(col("n_db1") =!= col("n_db2")))
-  }
+      .filter(col("n_db1") =!= col("n_db2"))
 
   /** Default bag diff: dispatches on the normalized projection's width.
     * Narrow tables take the one-scan [[dataDriftBag]] (the full-row
@@ -281,15 +285,13 @@ final class DriftCompare(
     * `wideThreshold` columns the shuffle volume of the full row dwarfs a
     * second parquet scan and [[dataDriftBagHashed]] wins — the 100 TB
     * design point for fact tables. Both produce identical rows, so the
-    * choice is purely a physical-plan decision.
+    * choice is purely a physical-plan decision. Each side's input is
+    * resolved once, for the dispatch and the chosen diff alike.
     */
-  def dataDriftBagAuto(table: String, wideThreshold: Int = 12): Option[DataFrame] = {
-    val in1 = dropIgnored(sideInput(side1, table), table)
-    val in2 = dropIgnored(sideInput(side2, table), table)
-    val (p1, _) = normalizedProjection(in1, in2)
-    if (p1.schema.size >= wideThreshold) dataDriftBagHashed(table)
-    else dataDriftBag(table)
-  }
+  def dataDriftBagAuto(table: String, wideThreshold: Int = 12): Option[DataFrame] =
+    projected(table).map { case (p1, p2) =>
+      if (p1.schema.size >= wideThreshold) bagHashed(p1, p2) else bag(p1, p2)
+    }
 
   /** Hash-keyed twin of [[dataDriftBag]] for wide tables at scale: the
     * multiplicity aggregation groups on `hashed_row` ALONE, so the shuffle
@@ -312,16 +314,12 @@ final class DriftCompare(
     * strategy is left to AQE, which broadcasts exactly when the measured
     * build side is small and falls back to a shuffled hash join otherwise.
     */
-  def dataDriftBagHashed(table: String): Option[DataFrame] = {
-    val in1 = dropIgnored(sideInput(side1, table), table)
-    val in2 = dropIgnored(sideInput(side2, table), table)
-    val (p1, p2) = normalizedProjection(in1, in2)
-    if (p1.schema.isEmpty) return None
+  def dataDriftBagHashed(table: String): Option[DataFrame] =
+    projected(table).map { case (p1, p2) => bagHashed(p1, p2) }
+
+  private def bagHashed(p1: DataFrame, p2: DataFrame): DataFrame = {
     val cols = p1.columns
-    def tag(df: DataFrame, id: String) = df
-      .withColumn("observed_in", lit(id))
-      .withColumn("hashed_row", CanonicalRowHash(struct(cols.map(c => col(s"`$c`")): _*)))
-    val u = tag(p1, side1.id).unionByName(tag(p2, side2.id))
+    val u = tagged(p1, p2)
     val counts = u
       .groupBy("hashed_row")
       .agg(
@@ -337,8 +335,8 @@ final class DriftCompare(
       .agg(first(col(s"`${cols.head}`")).as(cols.head),
         (cols.tail.map(c => first(col(s"`$c`")).as(c)) ++
           Seq(first("n_db1").as("n_db1"), first("n_db2").as("n_db2"))): _*)
-    Some(rep.select((cols.map(c => col(s"`$c`")) ++
-      Seq(col("hashed_row"), col("n_db1"), col("n_db2"))): _*))
+    rep.select((cols.map(c => col(s"`$c`")) ++
+      Seq(col("hashed_row"), col("n_db1"), col("n_db2"))): _*)
   }
 
   /** Per-table drift counts by side (reference:

@@ -424,12 +424,11 @@ object Eval {
     */
   def isotonicCalibration(df: DataFrame, scoreCol: Column, label: Column,
                           maxBins: Int = 1024): DataFrame = {
-    val levelTable = df.filter(scoreCol.isNotNull)
+    // the level table is shared by the bound probe and the real collect
+    val levels = Materialize.within(df.filter(scoreCol.isNotNull)
       .groupBy(scoreCol.cast("double").as("score"))
       .agg(count(lit(1)).as("n"),
-        sum(when(label, 1L).otherwise(0L)).as("pos"))
-      .persist() // shared by the bound probe and the real collect
-    val levels = try {
+        sum(when(label, 1L).otherwise(0L)).as("pos"))) { levelTable =>
       // bound BEFORE anything corpus-sized reaches the driver: an
       // unbinned continuous score has millions of distinct levels, and
       // collecting them first just to fail the require would itself be
@@ -441,7 +440,7 @@ object Eval {
           "score levels — bin the score first (quantile_bins or " +
           "floor(score*B)/B) so the PAVA table stays model-sized")
       levelTable.orderBy("score").collect()
-    } finally levelTable.unpersist(blocking = false)
+    }
     // PAVA with exact rational compares: merge while the previous block
     // rate exceeds the current (pos_p·n_c > pos_c·n_p)
     case class Block(var n: Long, var pos: Long, var upto: Int)

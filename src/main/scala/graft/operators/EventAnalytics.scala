@@ -43,7 +43,7 @@ object EventAnalytics {
     require(steps.nonEmpty, "funnel needs at least one step")
     val eager = steps.size > persistThreshold
     def cache(df: DataFrame): DataFrame =
-      if (eager) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (eager) df.persist()
       else df
     var reach = cache(events.filter(col(typeCol) === steps.head)
       .groupBy(col(userCol).as("u")).agg(min(col(tsCol)).as("t")))

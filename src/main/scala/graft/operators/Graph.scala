@@ -69,7 +69,7 @@ object Graph {
       if (materialize) {
         // the pair's checkpoint and bridge cache are now dead — drop
         // them or executor storage grows linearly with iters
-        unpersistCheckpoint(lastCkpt)
+        Materialize.release(lastCkpt)
         if (lastLazy != null) { lastLazy.unpersist(blocking = false); lastLazy = null }
         lastCkpt = next
       } else lastLazy = next
@@ -81,27 +81,6 @@ object Graph {
     outDeg.unpersist(blocking = false)
     ranks
   }
-
-  /** Drop the cached RDD behind a `localCheckpoint`ed DataFrame.
-    * `df.rdd.unpersist` would miss it — `.rdd` derives a NEW RDD above the
-    * checkpointed one — so reach the [[LogicalRDD]] leaf directly.
-    */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
-  /** Drop the pinned MEMORY_AND_DISK blocks behind a returned graph
-    * result ([[pageRank]] / [[labelPropagation]] / [[kCore]] all return
-    * `localCheckpoint`ed frames whose storage otherwise stays pinned
-    * for the session). Call AFTER the last action on the result — the
-    * frame reads the checkpoint lazily. Delegates to the shared lineage
-    * walker in [[Sampling.release]], which unpersists every persisted
-    * RDD ancestor reachable from the result's LogicalRDD leaves.
-    */
-  def release(df: DataFrame): Unit = Sampling.release(df)
 
   /** Exact triangle count per node over an undirected edge list, by the
     * compact-forward scheme with DEGREE-ORDERED orientation (Latapy
@@ -254,7 +233,7 @@ object Graph {
             .filter(col("community") =!= col("_old")).count()
         else 1L
       if (materialize) {
-        unpersistCheckpoint(lastCkpt)
+        Materialize.release(lastCkpt)
         if (lastLazy != null) { lastLazy.unpersist(blocking = false); lastLazy = null }
         lastCkpt = next
       } else lastLazy = next
@@ -263,15 +242,15 @@ object Graph {
     }
     und.unpersist(blocking = false)
     // early exit can land on a NON-materialized (lazy persist()) round:
-    // a Dataset-level cache that [[Sampling.release]]'s RDD-lineage
-    // walker (LogicalRDD leaves only) cannot unpersist, pinning the
-    // blocks for the session. Honor the release() contract — the
+    // a Dataset-level cache that [[Materialize.release]]'s RDD-lineage
+    // walker (plan-leaf RDDs only) cannot unpersist, pinning the
+    // blocks for the session. Honor the release contract — the
     // returned frame is always a localCheckpoint — by materializing
     // the final lazy round and dropping both caches it supersedes.
     if (lastLazy ne null) {
       val fin = labels.localCheckpoint(eager = true)
       lastLazy.unpersist(blocking = false)
-      unpersistCheckpoint(lastCkpt)
+      Materialize.release(lastCkpt)
       labels = fin
     }
     labels
@@ -317,7 +296,7 @@ object Graph {
         .select("a", "b")
         .localCheckpoint(eager = true)
       val m = next.count()
-      unpersistCheckpoint(e)
+      Materialize.release(e)
       converged = m == n
       e = next
       n = m
@@ -499,7 +478,7 @@ object Graph {
         else nextPlan.persist()
       if (materialize) {
         // the pair's checkpoint and intermediate cache are now dead
-        unpersistCheckpoint(lastCkpt)
+        Materialize.release(lastCkpt)
         if (lastLazy != null) { lastLazy.unpersist(blocking = false); lastLazy = null }
         lastCkpt = next
       } else lastLazy = next
@@ -591,7 +570,7 @@ object Graph {
         // previous checkpoint itself is dead
         lazies.foreach(_.unpersist(blocking = false))
         lazies.clear()
-        if (lastCkpt != null) unpersistCheckpoint(lastCkpt)
+        if (lastCkpt != null) Materialize.release(lastCkpt)
         lastCkpt = hNext
       }
       auth = aNext
@@ -653,7 +632,7 @@ object Graph {
       col("dst").cast("long").as("dst")).distinct()
     val w = Window.partitionBy("src").orderBy("dst")
     // localCheckpoint, not bare persist: every step re-reads this table,
-    // and the result frame must stay release()-able (the
+    // and the result frame must stay [[Materialize.release]]-able (the
     // labelPropagation early-exit lesson — a returned lazy persist
     // pins cache blocks the RDD-lineage walker can't find)
     val nbr = e.select(col("src"), col("dst"),

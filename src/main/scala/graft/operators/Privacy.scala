@@ -251,11 +251,9 @@ object Privacy {
     require(salt.nonEmpty, "an empty salt makes the draw guessable")
     // persist the bounded value table: the guard action and the argmax
     // must not each re-scan the corpus (the kendallTau lesson, r12)
-    val vals = df.filter(valueCol.isNotNull)
+    Materialize.within(df.filter(valueCol.isNotNull)
       .groupBy(valueCol.cast("double").as("v"))
-      .agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      .agg(count(lit(1)).as("c"))) { vals =>
       val g = vals.agg(count(lit(1)).as("bins"), sum("c").as("n")).head()
       val (bins, n) = (g.getLong(0), g.getLong(1))
       require(bins <= maxBins,
@@ -267,7 +265,7 @@ object Privacy {
       val spark = df.sparkSession
       import spark.implicits._
       Seq((win.getDouble(0), n, bins)).toDF("dp_quantile", "n", "n_bins")
-    } finally { vals.unpersist(blocking = false) }
+    }
   }
 
   /** The argmax stage of [[dpQuantile]] as an unexecuted plan over the

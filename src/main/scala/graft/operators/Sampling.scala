@@ -172,28 +172,6 @@ object Sampling {
     * per-partition step) computes the running totals with ZERO
     * exchanges beyond the single range exchange inside the checkpoint.
     */
-  /** Drop the pinned (localCheckpoint'ed) partitioned layout behind a
-    * budget-select result. The checkpoint must stay alive while the
-    * result is consumed (the returned frame reads it lazily), so the
-    * operator cannot unpersist it itself — call this AFTER the last
-    * action on the result, or repeated large selects accumulate
-    * MEMORY_AND_DISK blocks for the session lifetime. Walks the result's
-    * RDD lineage and unpersists every persisted ancestor; a no-op on
-    * frames without pinned ancestry.
-    */
-  def release(df: DataFrame): Unit = {
-    def walk(r: org.apache.spark.rdd.RDD[_], depth: Int): Unit =
-      if (depth < 20) {
-        if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-          r.unpersist(blocking = false)
-        r.dependencies.foreach(d => walk(d.rdd, depth + 1))
-      }
-    df.queryExecution.logical.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => walk(lr.rdd, 0)
-      case _ => ()
-    }
-  }
-
   private def budgetSelect(df: DataFrame, domainColOpt: Option[String],
                            idCol: String, scoreCol: String,
                            tokensCol: String, budget: Long,
@@ -277,8 +255,8 @@ object Sampling {
     * per-partition fold emits each row's exclusive running total. No
     * global window, no single-task sort. Integer token counts keep
     * every placement exact, so an engine replaying the same order
-    * reproduces the packing bit-for-bit. Call [[release]] on the result
-    * after the last action to drop the pinned layout.
+    * reproduces the packing bit-for-bit. Call [[Materialize.release]] on
+    * the result after the last action to drop the pinned layout.
     */
   def packWindows(df: DataFrame, idCol: String, tokensCol: String,
                   capacity: Long, nPartitions: Int = 0): DataFrame = {

@@ -994,17 +994,16 @@ object Similarity {
     val spark = novel.sparkSession
     val centroids = loadCentroids(spark, s"$path/_centroids")
     val existing = spark.read.parquet(s"$path/postings").select(col("id"))
-    val fresh = novel.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .join(existing, Seq("id"), "left_anti")
-      .withColumn("cell", element_at(probeCells(col("v"), centroids, 1), 1))
     // count once, write once: persist the (small) novel batch
-    fresh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.within(novel
+      .select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
+      .join(existing, Seq("id"), "left_anti")
+      .withColumn("cell", element_at(probeCells(col("v"), centroids, 1), 1))) { fresh =>
       val n = fresh.count()
       if (n > 0)
         fresh.write.mode("append").partitionBy("cell").parquet(s"$path/postings")
       n
-    } finally { fresh.unpersist(blocking = false) }
+    }
   }
 
   /** Search the index: each query probes its `nProbe` nearest cells and

@@ -828,14 +828,12 @@ object Stats {
     val spark = df.sparkSession
     // the bounded series feeds four actions (count, both sides of the
     // pair self-join, residuals): persist so the upstream scan /
-    // aggregation producing the series runs once. Released in finally.
-    val series = df
+    // aggregation producing the series runs once.
+    Materialize.within(df
       .filter(col(tCol).isNotNull && col(valueCol).isNotNull)
       .select(col(tCol).cast("long").as("_t"),
         LimbMoments.units(valueCol, precision, scale).as("_u"))
-      .filter(col("_u").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      .filter(col("_u").isNotNull)) { series =>
     val n = series.count()
     require(n >= 2, s"theilSen needs at least 2 points, got $n")
     require(n <= maxN,
@@ -888,7 +886,7 @@ object Stats {
             }
             res.iterator
           }.collect().head
-      } finally Sampling.release(parted) // drop the checkpoint blocks
+      } finally Materialize.release(parted) // drop the checkpoint blocks
     }
     val slope = invCdfMedian(slopes.withColumnRenamed("_s", "slope"), "slope")
     val resid = series
@@ -903,7 +901,7 @@ object Stats {
         StructField("n_pairs", LongType, nullable = false),
         StructField("slope", DoubleType, nullable = false),
         StructField("intercept", DoubleType, nullable = false))))
-    } finally { series.unpersist(blocking = false) }
+    }
   }
 
   /** Spearman rank correlation between two numeric columns — the
@@ -1060,12 +1058,10 @@ object Stats {
   def cohensKappa(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     // two reductions (n/agree, margin cross term) read the cell table:
     // persist so the raw-row scan + groupBy runs once, not twice
-    val cells = df.filter(col(aCol).isNotNull && col(bCol).isNotNull)
+    Materialize.within(df.filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .groupBy(col(aCol).cast("string").as("_a"),
         col(bCol).cast("string").as("_b"))
-      .agg(count(lit(1)).as("_c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      .agg(count(lit(1)).as("_c"))) { cells =>
     val agg = cells.agg(sum("_c").as("_n"),
       sum(when(col("_a") === col("_b"), col("_c")).otherwise(0L)).as("_agree"))
       .head()
@@ -1095,7 +1091,7 @@ object Stats {
         StructField("po", DoubleType, nullable = false),
         StructField("pe", DoubleType, nullable = false),
         StructField("kappa", DoubleType, nullable = true))))
-    } finally { cells.unpersist(blocking = false) }
+    }
   }
 
   /** Poisson-bootstrap confidence interval for a column mean — the
@@ -1139,11 +1135,9 @@ object Stats {
     // per-(row, replicate) md5 was ~the entire bootstrap CPU
     // persisted across its two consumers (replicate fold + point
     // estimate) so the upstream scan/aggregation runs once
-    val seeded = rows.select(col("_u"),
+    Materialize.within(rows.select(col("_u"),
       conv(substring(md5(col("_id")), 1, 15), 16, 10)
-        .cast("decimal(20,0)").cast("long").as("_seed"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+        .cast("decimal(20,0)").cast("long").as("_seed"))) { seeded =>
       val reps = seeded
         .select(col("_seed"), col("_u"),
           explode(sequence(lit(1), lit(nReplicates))).as("_r"))
@@ -1188,7 +1182,7 @@ object Stats {
           StructField("lo", DoubleType, nullable = false),
           StructField("hi", DoubleType, nullable = false),
           StructField("n_replicates", LongType, nullable = false))))
-    } finally seeded.unpersist(blocking = false)
+    }
   }
 
   /** Poisson-bootstrap CI on the DIFFERENCE of two arm means — the CI
@@ -1230,11 +1224,9 @@ object Stats {
     // fold and the point-estimate base fold) — the input here is
     // usually itself an aggregation (per-unit outcomes), and without
     // the cache that upstream shuffle runs twice.
-    val seeded = rows.select(col("_arm"), col("_u"),
+    Materialize.within(rows.select(col("_arm"), col("_u"),
       conv(substring(md5(col("_id")), 1, 15), 16, 10)
-        .cast("decimal(20,0)").cast("long").as("_seed"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+        .cast("decimal(20,0)").cast("long").as("_seed"))) { seeded =>
       // (replicate, arm)-keyed fold — two UNCONDITIONAL exact-decimal
       // sums instead of four per-row when(arm)-guarded ones (the r14
       // shape): half the decimal work per exploded row, and the
@@ -1302,7 +1294,7 @@ object Stats {
           StructField("lo", DoubleType, nullable = false),
           StructField("hi", DoubleType, nullable = false),
           StructField("n_replicates", LongType, nullable = false))))
-    } finally seeded.unpersist(blocking = false)
+    }
   }
 
   /** Integer Poisson(1) inverse-CDF thresholds at 60-bit precision —
@@ -1478,14 +1470,12 @@ object Stats {
     // guard, pair masses, two margins, n). Persist it so the raw-row
     // scan + groupBy runs exactly once — without this, every head()
     // re-ran the full input scan (~5x wasted IO; at 100 TB, 5 full
-    // passes instead of 1). Released in the finally below.
-    val cells = df
+    // passes instead of 1).
+    Materialize.within(df
       .select(LimbMoments.units(aCol, precision, scale).as("_a"),
         LimbMoments.units(bCol, precision, scale).as("_b"))
       .filter(col("_a").isNotNull && col("_b").isNotNull)
-      .groupBy("_a", "_b").agg(count(lit(1)).as("_c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      .groupBy("_a", "_b").agg(count(lit(1)).as("_c"))) { cells =>
     // dims + n folded into the first action: one pass over the cached
     // cell table answers both the guard and the row count
     val dims = cells.agg(countDistinct("_a").as("_da"),
@@ -1545,7 +1535,7 @@ object Stats {
         StructField("concordant", LongType, nullable = false),
         StructField("discordant", LongType, nullable = false),
         StructField("tau_b", DoubleType, nullable = true))))
-    } finally { cells.unpersist(blocking = false) }
+    }
   }
 
   /** Two-proportion z-test between cohorts `g1` and `g2` of a binary
@@ -2767,11 +2757,9 @@ object Stats {
     * the two driver actions (same pattern as [[cohensKappa]]).
     */
   def fleissKappa(df: DataFrame, itemCol: String, catCol: String): DataFrame = {
-    val cells = df.filter(col(itemCol).isNotNull && col(catCol).isNotNull)
+    Materialize.within(df.filter(col(itemCol).isNotNull && col(catCol).isNotNull)
       .groupBy(col(itemCol).as("_i"), col(catCol).cast("string").as("_c"))
-      .agg(count(lit(1)).as("_k"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      .agg(count(lit(1)).as("_k"))) { cells =>
       val items = cells.groupBy("_i")
         .agg(sum("_k").as("_m"), sum(col("_k") * col("_k")).as("_s2"))
       val a = items.agg(count(lit(1)).as("_N"), min("_m").as("_lo"),
@@ -2807,7 +2795,7 @@ object Stats {
           StructField("p_bar", DoubleType, nullable = false),
           StructField("p_e", DoubleType, nullable = false),
           StructField("kappa", DoubleType, nullable = true))))
-    } finally { cells.unpersist(blocking = false) }
+    }
   }
 
   /** Krippendorff's α (nominal data): agreement that tolerates a
@@ -3182,7 +3170,7 @@ object Stats {
     * prefix offsets, pass 2 folds running totals inside each partition
     * with zero further exchanges. Driver state: one row per PARTITION.
     * The pinned layout stays cached while the result is consumed —
-    * call [[Sampling.release]] on the result afterwards (the
+    * call [[Materialize.release]] on the result afterwards (the
     * budget-select/packWindows contract).
     */
   def lorenzCurve(df: DataFrame, valueCol: String, points: Int = 10,
@@ -3421,14 +3409,12 @@ object Stats {
     val v = col(valueCol).cast(s"decimal($precision,$scale)")
     // persist the cell table: the k-count action and the main fold must
     // not each re-scan the corpus (the kendallTau lesson, r12)
-    val cellsRaw = df
+    Materialize.within(df
       .filter(col(blockCol).isNotNull && col(treatCol).isNotNull &&
         v.isNotNull)
       .groupBy(col(blockCol).as("_b"), col(treatCol).cast("string")
         .as("_t"))
-      .agg(sum(v).as("_v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      .agg(sum(v).as("_v"))) { cellsRaw =>
     val kTot = cellsRaw.agg(count_distinct(col("_t"))).head().getLong(0)
     require(kTot >= 2, "friedman needs at least 2 treatments")
     // complete blocks only: within-block ranks are incomparable
@@ -3470,7 +3456,7 @@ object Stats {
     val spark = df.sparkSession
     spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(row), 1), plan.schema)
-    } finally cellsRaw.unpersist(blocking = false)
+    }
   }
 
   /** Cochran's Q for k binary treatments over n complete blocks — the
@@ -3484,13 +3470,11 @@ object Stats {
   def cochranQ(df: DataFrame, blockCol: String, treatCol: String,
                success: Column): DataFrame = {
     // same persist + eager-row discipline as [[friedman]]
-    val cellsRaw = df
+    Materialize.within(df
       .filter(col(blockCol).isNotNull && col(treatCol).isNotNull)
       .groupBy(col(blockCol).as("_b"),
         col(treatCol).cast("string").as("_t"))
-      .agg(max(when(success, 1L).otherwise(0L)).as("_y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      .agg(max(when(success, 1L).otherwise(0L)).as("_y"))) { cellsRaw =>
     val kTot = cellsRaw.agg(count_distinct(col("_t"))).head().getLong(0)
     require(kTot >= 2, "cochranQ needs at least 2 treatments")
     val complete = cellsRaw.groupBy("_b").agg(count(lit(1)).as("_kb"))
@@ -3516,7 +3500,7 @@ object Stats {
     val spark = df.sparkSession
     spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(row), 1), plan.schema)
-    } finally cellsRaw.unpersist(blocking = false)
+    }
   }
 
   /** One-way intraclass correlation ICC(1,1) — "how much of the rating
@@ -3621,10 +3605,8 @@ object Stats {
     require(q > 0 && q < 1, "q in (0, 1)")
     import org.apache.spark.sql.expressions.Window
     val v = col(valueCol).cast(s"decimal($precision,$scale)")
-    val cells = df.filter(v.isNotNull)
-      .groupBy(v.as("_v")).agg(count(lit(1)).as("_c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.within(df.filter(v.isNotNull)
+      .groupBy(v.as("_v")).agg(count(lit(1)).as("_c"))) { cells =>
       val n = cells.agg(sum("_c")).head().getLong(0)
       require(n >= 2, "quantileCI needs at least 2 rows")
       // ranks: the point estimate's two middle ranks in exact decimal
@@ -3655,7 +3637,7 @@ object Stats {
       import spark.implicits._
       Seq((n, q, r6((d(0) + d(1)) / 2.0), loR, hiR, d(2), d(3)))
         .toDF("n", "q", "point", "lo_rank", "hi_rank", "ci_lo", "ci_hi")
-    } finally { cells.unpersist(blocking = false) }
+    }
   }
 
   /** Jarque–Bera normality screen from one pass of exact decimal power
@@ -4091,13 +4073,11 @@ object Stats {
     * discipline — and the one-row result materializes eagerly).
     */
   def weightedKappa(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val cells = df
+    Materialize.within(df
       .filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .groupBy(col(aCol).cast("long").as("_i"),
         col(bCol).cast("long").as("_j"))
-      .agg(count(lit(1)).as("_c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      .agg(count(lit(1)).as("_c"))) { cells =>
       val cats = cells.select(col("_i").as("_k"))
         .union(cells.select(col("_j"))).distinct()
         .agg(min("_k").as("_lo"), max("_k").as("_hi"),
@@ -4140,7 +4120,7 @@ object Stats {
           StructField("po_w", DoubleType, nullable = false),
           StructField("pe_w", DoubleType, nullable = false),
           StructField("kappa_w", DoubleType, nullable = true))))
-    } finally { cells.unpersist(blocking = false) }
+    }
   }
 
   /** Gwet's AC1 inter-rater agreement — [[cohensKappa]] without the
@@ -4157,13 +4137,11 @@ object Stats {
     * (the friedman discipline).
     */
   def gwetAC1(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val cells = df
+    Materialize.within(df
       .filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .groupBy(col(aCol).cast("string").as("_a"),
         col(bCol).cast("string").as("_b"))
-      .agg(count(lit(1)).as("_c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      .agg(count(lit(1)).as("_c"))) { cells =>
       val aTot = cells.groupBy("_a").agg(sum("_c").as("_ra"))
       val bTot = cells.groupBy("_b").agg(sum("_c").as("_rb"))
       val cats = aTot.select(col("_a").as("_q"), col("_ra").as("_m"))
@@ -4196,7 +4174,7 @@ object Stats {
           StructField("po", DoubleType, nullable = false),
           StructField("pe_gwet", DoubleType, nullable = false),
           StructField("ac1", DoubleType, nullable = true))))
-    } finally { cells.unpersist(blocking = false) }
+    }
   }
 
   /** G-test (likelihood-ratio χ²) of independence between two
@@ -4322,9 +4300,8 @@ object Stats {
                          g1: String, g2: String,
                          precision: Int = 9, scale: Int = 2,
                          maxPairCells: Long = 4000000L): DataFrame = {
-    val counts = cohortCounts(df, groupCol, valueCol, g1, g2, precision, scale)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.within(
+      cohortCounts(df, groupCol, valueCol, g1, g2, precision, scale)) { counts =>
       val g = counts.agg(
         sum(when(col("_c1") > 0, 1L).otherwise(0L)).as("_ka"),
         sum(when(col("_c2") > 0, 1L).otherwise(0L)).as("_kb"),
@@ -4377,6 +4354,6 @@ object Stats {
           StructField("n2", LongType, nullable = false),
           StructField("n_pairs", LongType, nullable = false),
           StructField("hl_shift", DoubleType, nullable = false))))
-    } finally { counts.unpersist(blocking = false) }
+    }
   }
 }

@@ -1405,11 +1405,9 @@ object TextAnalysis {
     // final join must not EACH re-run the corpus tokenize+explode (the
     // kendallTau recompute lesson — this was a 4x corpus-scan plan).
     // The result localCheckpoints eagerly so the persist can release;
-    // callers drop the pinned blocks with Graph.releaseGraph-style
-    // unpersist when done.
-    val types = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // callers drop the pinned blocks with [[Materialize.release]] when
+    // done.
+    Materialize.within(bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))) { types =>
       val left = types.groupBy("w1")
         .agg(sum("c12").as("c1"), count(lit(1)).as("n_follow"))
       val right = types.groupBy("w2").agg(count(lit(1)).as("n_prec"))
@@ -1425,7 +1423,7 @@ object TextAnalysis {
                 (col("n_prec").cast("double") / col("n_types")), 6)
             .as("p_kn"))
         .localCheckpoint(eager = true)
-    } finally { types.unpersist(blocking = false) }
+    }
   }
 
   /** Distinct-n diversity (Li et al. 2016's distinct-1/2/3): for each

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Materialize}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -49,11 +49,10 @@ object DedupOps {
       if (!batch.isEmpty) {
         val spark = batch.sparkSession
         val idx = Dedup.loadLshIndex(spark, indexPath)
-        val decisions = Dedup
+        // one classification pass feeds BOTH writes
+        Materialize.within(Dedup
           .dedupAgainstIndex(batch, textCol, idCol, threshold, idx)
-          .select("new_id", "matched_id", "jaccard", "is_novel")
-          .persist() // one classification pass feeds BOTH writes
-        try {
+          .select("new_id", "matched_id", "jaccard", "is_novel")) { decisions =>
           // epoch-partitioned OVERWRITE, not a flat append: a replayed
           // micro-batch rewrites its own epoch directory instead of
           // appending duplicate (epoch, id) rows — the decision log is
@@ -66,7 +65,7 @@ object DedupOps {
           val novelDocs = batch.join(novelIds,
             batch(idCol) === novelIds("new_id"), "left_semi")
           Dedup.appendLshIndex(novelDocs, textCol, idCol, indexPath)
-        } finally decisions.unpersist(blocking = false)
+        }
       }
       ()
     }
@@ -103,10 +102,8 @@ object DedupOps {
                               decisionsPath: String): DataStreamWriter[Row] =
     newVecs.writeStream.foreachBatch { (batch: DataFrame, epochId: Long) =>
       if (!batch.isEmpty) {
-        val kept = graft.operators.SemanticIndex
-          .dedupAgainstIndex(batch, idCol, vecCol, minCosine, indexPath)
-          .persist()
-        try {
+        Materialize.within(graft.operators.SemanticIndex
+          .dedupAgainstIndex(batch, idCol, vecCol, minCosine, indexPath)) { kept =>
           // materialize the survivors BEFORE appending to the index the
           // plan reads from — the cache, not the re-listed directory,
           // feeds the append
@@ -120,7 +117,7 @@ object DedupOps {
             .parquet(s"$decisionsPath/epoch_id=$epochId")
           graft.operators.SemanticIndex
             .append(kept, idCol, vecCol, indexPath)
-        } finally kept.unpersist(blocking = false)
+        }
       }
       ()
     }

@@ -266,7 +266,7 @@ object StreamingDrift {
     val refHashes = reference
       .select(CanonicalRowHash(struct(cols.map(c => col(s"`$c`")): _*)).as("hashed_row"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist()
     val drift = stream
       .withColumn("hashed_row",
         CanonicalRowHash(struct(cols.map(c => col(s"`$c`")): _*)))

@@ -409,6 +409,17 @@ class EvalCardSpec extends SparkSpecBase {
     assert(e.getMessage.contains("no non-null"), e.getMessage)
   }
 
+  test("runEmbdrift prints '.' decimals under a comma-decimal default locale") {
+    val out = java.nio.file.Files.createTempDirectory("embdrift-de").toString
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    val msg = try GraftApp.runEmbdrift(spark, "/root/testdata/sf0.001",
+        "/root/testdata/sf0.001", out, matchCells = true)
+      finally java.util.Locale.setDefault(saved)
+    assert(msg.contains("mmd2=0.000000000"), msg)
+    assert(msg.contains("cell_match_ari=1.000000"), msg)
+  }
+
   test("runEmbdrift --pq-codebooks adds the compression-layer axis") {
     val out = java.nio.file.Files.createTempDirectory("embdrift_pq").toString
     val books = graft.operators.Pq.fit(

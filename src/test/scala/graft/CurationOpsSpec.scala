@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Sampling, TextAnalysis}
+import graft.operators.{Dedup, Materialize, Sampling, TextAnalysis}
 import org.apache.spark.sql.functions._
 
 class WeightedSampleSpec extends SparkSpecBase {
@@ -269,7 +269,7 @@ class DomainBudgetSpec extends SparkSpecBase {
     val sel = Sampling.tokenBudgetSelect(docs, "id", "score", "tok", 100000L)
     assert(sel.count() > 0)
     assert(pinnedIds(sel).nonEmpty, "expected the checkpointed layout pinned")
-    Sampling.release(sel)
+    Materialize.release(sel)
     assert(pinnedIds(sel).isEmpty, "release must unpersist the layout")
   }
 

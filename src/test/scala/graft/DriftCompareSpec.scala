@@ -231,12 +231,15 @@ class DriftCompareSpec extends SparkSpecBase {
     } finally r.dataDrift.values.foreach(_.unpersist())
   }
 
-  /** A side that counts its listings and can fail one table's schema. */
+  /** A side that counts its listings and table resolutions, and can fail
+    * one table's schema.
+    */
   private class CountingSide(inner: MemorySide, brokenSchema: Option[String] = None) extends Side {
     val listings = new java.util.concurrent.atomic.AtomicInteger()
+    val tables = new java.util.concurrent.atomic.AtomicInteger()
     override def id: String = inner.id
     override def listTables(): Seq[String] = { listings.incrementAndGet(); inner.listTables() }
-    override def table(name: String): DataFrame = inner.table(name)
+    override def table(name: String): DataFrame = { tables.incrementAndGet(); inner.table(name) }
     override def schema(name: String) =
       if (brokenSchema.contains(name)) throw new IllegalStateException(s"no schema for $name")
       else inner.schema(name)
@@ -248,6 +251,15 @@ class DriftCompareSpec extends SparkSpecBase {
     val r = new DriftCompare(spark, s1, s2).compareAll(parallelism = 2)
     assert(r.missingTables == Seq(MissingTableRow("only1", "db1", "db2")))
     assert((s1.listings.get, s2.listings.get) == ((1, 1)))
+  }
+
+  test("dataDriftBagAuto resolves each side's table once") {
+    val s1 = new CountingSide(MemorySide("db1", Map("t" -> base().union(base().filter($"id" === 2)))))
+    val s2 = new CountingSide(MemorySide("db2", Map("t" -> base())))
+    val bag = new DriftCompare(spark, s1, s2).dataDriftBagAuto("t").get
+    assert((s1.tables.get, s2.tables.get) == ((1, 1)))
+    assert(bag.select("id", "n_db1", "n_db2").as[(Long, Long, Long)].collect().toSeq ==
+      Seq((2L, 2L, 1L)))
   }
 
   test("compareAll rethrows a table's failure and releases what it persisted") {

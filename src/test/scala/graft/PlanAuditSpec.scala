@@ -196,7 +196,7 @@ class PlanAuditSpec extends SparkSpecBase {
           s"partitions $p1/$p2 overlap in rank order: min($p1)=$lo1 < max($p2)=$hi2")
       case _ => ()
     }
-    graft.operators.Sampling.release(sel)
+    graft.operators.Materialize.release(sel)
   }
 
   test("labelCentroids aggregation is partial (map-side combined) on model-sized keys") {
@@ -1418,7 +1418,7 @@ class AqeSkewJoinSpec extends SparkSpecBase {
     out.collect() // finalize AQE on THIS QueryExecution
     val p = out.queryExecution.executedPlan.toString
     assert(!p.contains("Window"), s"expected no Window in lorenzCurve plan:\n$p")
-    graft.operators.Sampling.release(out)
+    graft.operators.Materialize.release(out)
   }
 
   test("r14 broadcast audit: data-derived dimension frames carry no forced hint") {

@@ -215,7 +215,7 @@ class StatsOpsSpec extends SparkSpecBase {
     // path 0-1-2 stabilizes in round 1 and DETECTS convergence in round 2
     // — an even round, i.e. the lazy-persist() leg of the
     // checkpoint-every-2 cadence. The result must still be a
-    // localCheckpoint (LogicalRDD leaf) so Sampling.release's
+    // localCheckpoint (LogicalRDD leaf) so Materialize.release's
     // RDD-lineage walker can free it; the r14 version returned the lazy
     // Dataset cache, which release() cannot unpersist.
     val path = Seq((0L, 1L), (1L, 2L)).toDF("src", "dst")
@@ -227,7 +227,7 @@ class StatsOpsSpec extends SparkSpecBase {
     }
     assert(leaves.nonEmpty,
       "early-exit result must be a localCheckpoint, not a lazy cache")
-    graft.operators.Sampling.release(lbl)
+    graft.operators.Materialize.release(lbl)
     assert(leaves.forall(_.rdd.getStorageLevel ==
       org.apache.spark.storage.StorageLevel.NONE),
       "release() must free the early-exit result's blocks")
