@@ -18,7 +18,7 @@ object Bench {
       .getOrCreate()
     // uncounted warmup: JIT/codegen + parquet footer reads, not query work
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).collect()
+    Tables.t(spark, sfDir, "lineitem").limit(1).collect()
     // fault in the shuffle write/read path once: this host's first-touch
     // pages are ~10x slower than reuse (see NOTES), so an uncounted
     // shuffle keeps that cost out of the first measured queries

@@ -7,11 +7,11 @@ import org.apache.spark.sql.SparkSession
   * lived only in Bench/Verify/ExplainQ — the product CLI `GraftApp`
   * got neither, so a library/CLI user missed the near-empty-task win).
   *
-  * All values are deployment defaults, overridable per-entrypoint via
-  * `.config(...)` after calling [[builder]] and at launch via standard
-  * `spark.*` system properties / `--conf`. The size-based settings are
-  * parameterised by env so a cluster deployment can raise them without
-  * a rebuild:
+  * All values are fixed deployment defaults: they win over a `spark.*`
+  * system property or `--conf` of the same key set at launch, and an
+  * entrypoint's `.config(...)` after calling [[builder]] wins over them.
+  * The size-based settings are parameterised by env so a cluster
+  * deployment can raise them without a rebuild:
   *
   *  - `SPARK_GRAFT_CPUS`: core count for `local[n]` masters AND
   *    `spark.sql.shuffle.partitions`. The shuffle-partition count is a

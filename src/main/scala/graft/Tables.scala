@@ -7,8 +7,11 @@ import org.apache.spark.sql.functions._
   * (TESTDATA.md: one `<name>.parquet` per table under a scale-factor dir).
   */
 object Tables {
+  /** Table `name` of the catalog in `dir`, its schema read from one footer
+    * on the driver, like every [[graft.sources.ParquetSide]] table.
+    */
   def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    graft.sources.ParquetSide.read(s, s"$dir/$name.parquet")
 
   /** `events.parquet` has carried two `ts` encodings across driver drops:
     * TIMESTAMP(NANOS) (which Spark's Parquet reader only accepts as a

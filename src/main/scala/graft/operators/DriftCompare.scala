@@ -341,12 +341,16 @@ final class DriftCompare(
 
   /** Per-table drift counts by side (reference:
     * lotad/queries/duckdb/drift_analysis_extend_data_drift_summary.sql).
+    * One job and no shuffle: each partition counts its rows per side and
+    * the driver adds the counts up. On a persisted `drift` that job also
+    * fills the cache.
     */
   def summarize(table: String, drift: DataFrame): DataDriftSummaryRow = {
-    val counts = drift.groupBy("observed_in").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    DataDriftSummaryRow(table, side1.id, counts.getOrElse(side1.id, 0L),
-      side2.id, counts.getOrElse(side2.id, 0L))
+    val (id1, id2) = (side1.id, side2.id)
+    val (n1, n2) = drift.select("observed_in").as[String].rdd.aggregate((0L, 0L))(
+      { case ((a, b), o) => if (o == id1) (a + 1, b) else if (o == id2) (a, b + 1) else (a, b) },
+      { case ((a1, b1), (a2, b2)) => (a1 + a2, b1 + b2) })
+    DataDriftSummaryRow(table, id1, n1, id2, n2)
   }
 
   /** Full comparison across the catalog. Each side is listed once; then

@@ -158,8 +158,7 @@ private[graft] object EvalRegistry {
             far(col("vec_id")).as("embedding")))
       Similarity.mahalanobisScore(planted)
         .orderBy(col("mdist2").desc, col("vec_id"))
-        .limit(s.read.parquet(s"$dir/embeddings.parquet")
-          .filter(col("vec_id") % 97 === 0).count().toInt)
+        .limit(emb.filter(col("vec_id") % 97 === 0).count().toInt)
         .select(col("vec_id")).orderBy("vec_id")
     }),
 

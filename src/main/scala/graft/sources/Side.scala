@@ -1,6 +1,13 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 /** A "side" of a comparison: a named catalog of tables.
@@ -25,7 +32,11 @@ trait Side {
 /** A directory holding one `<table>.<format>` file/dir per table, for any
   * Spark batch source format (`parquet`, `orc`, `json`, `csv`, ...).
   * CSV/JSON get header + schema inference so dynamic introspection works
-  * like the reference's information_schema scans.
+  * like the reference's information_schema scans; both infer by scanning
+  * the data, in a Spark job, once per table. A parquet table with no
+  * options reads one footer on the driver and runs no job
+  * ([[ParquetSide.read]]); other parquet reads and ORC keep Spark's own
+  * inference.
   *
   * `options` pass through to the reader — e.g. `mergeSchema -> true` for
   * a parquet/orc table whose files were written under an EVOLVING schema
@@ -52,21 +63,87 @@ case class FormatSide(spark: SparkSession, dir: String, format: String, id: Stri
   }
   override def table(name: String): DataFrame =
     tableCache.computeIfAbsent(name, { n =>
-      val reader = spark.read.format(format)
-      val tuned = format match {
-        case "csv" => reader.option("header", "true").option("inferSchema", "true")
-        case "json" => reader // schema inferred by the source
-        case _ => reader
+      val path = s"$dir/$n$ext"
+      if (format == "parquet" && options.isEmpty) ParquetSide.read(spark, path)
+      else {
+        val reader = spark.read.format(format)
+        val tuned = format match {
+          case "csv" => reader.option("header", "true").option("inferSchema", "true")
+          case "json" => reader // schema inferred by the source
+          case _ => reader
+        }
+        tuned.options(options).load(path)
       }
-      tuned.options(options).load(s"$dir/$n$ext")
     })
 }
 
-/** A directory holding one `<table>.parquet` per table. */
+/** A directory holding one `<table>.parquet` per table; each table's
+  * schema comes from one footer read on the driver ([[ParquetSide.read]]).
+  */
 final case class ParquetSide(spark: SparkSession, dir: String, id: String) extends Side {
   private val inner = FormatSide(spark, dir, "parquet", id)
   override def listTables(): Seq[String] = inner.listTables()
   override def table(name: String): DataFrame = inner.table(name)
+}
+
+object ParquetSide {
+
+  /** `path` read as Parquet, with the schema Spark would infer but read
+    * from one footer on the driver. `spark.read.parquet` infers it in a
+    * Spark job, one per table, which costs more than the footer read
+    * itself (the reference learns schemas from metadata at no query cost,
+    * lotad/connection.py:148-162).
+    *
+    * The footer is the one Spark's non-merging inference reads
+    * (`ParquetUtils.inferSchema`), converted by Spark's own converter
+    * under the session's conf. A partitioned directory, a glob, a
+    * session with `spark.sql.parquet.mergeSchema` on (Spark then merges
+    * every file's schema), or a path whose footer cannot be read or
+    * converted goes to `spark.read.parquet`, so its schema and its errors
+    * stay Spark's.
+    */
+  def read(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+    if (path.exists("{}[]*?\\".contains(_)) ||
+      spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+    else try {
+      val conf = spark.sessionState.newHadoopConf()
+      val p = new Path(path)
+      val fs = p.getFileSystem(conf)
+      schemaFile(fs, fs.getFileStatus(p)).map { f =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      }
+    } catch { case NonFatal(_) => None }
+
+  /** The file Spark's inference takes the schema from: the path itself if
+    * it is a file; in a flat directory `_common_metadata`, else
+    * `_metadata`, else the first data file in path order. None for a
+    * directory with subdirectories or without a data file.
+    */
+  private def schemaFile(fs: FileSystem, status: FileStatus): Option[FileStatus] =
+    if (!status.isDirectory) Some(status)
+    else {
+      val visible = fs.listStatus(status.getPath).filterNot(s => hidden(s.getPath.getName))
+        .sortBy(_.getPath.toString)
+      val summaries = Seq("_common_metadata", "_metadata")
+      if (visible.exists(_.isDirectory)) None
+      else summaries.flatMap(n => visible.find(_.getPath.getName == n)).headOption
+        .orElse(visible.find(s => !summaries.contains(s.getPath.getName)))
+    }
+
+  /** The names Spark's file listing skips (`HadoopFSUtils.shouldFilterOutPathName`). */
+  private def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !(name.startsWith("_common_metadata") || name.startsWith("_metadata"))
 }
 
 /** In-memory side for tests and programmatic use. */

@@ -319,6 +319,28 @@ class DriftCompareSpec extends SparkSpecBase {
     for (t <- Seq("dups", "same")) assert(!java.nio.file.Files.exists(out.resolve(t)), t)
   }
 
+  test("summarize counts each side in one job, as groupBy(observed_in).count() does") {
+    // rows no other spec uses, so no cached plan is shared with this one
+    val kv = Seq((51L, "sum-a"), (52L, "sum-b")).toDF("id", "v")
+    def drift(db1: DataFrame, db2: DataFrame) = cmp(db1, db2).dataDrift("t").get.persist()
+    val frames = Seq(
+      ("empty", drift(kv, kv), (0L, 0L)),
+      ("db1-only", drift(kv, kv.limit(0)), (2L, 0L)),
+      ("db2-only", drift(kv.filter($"id" === 51L), kv), (0L, 1L)),
+      ("within-side dups", drift(kv.union(kv).union(Seq((53L, "sum-c")).toDF("id", "v")), kv), (1L, 0L)),
+      ("duplicate rows", Seq(("x", "db1"), ("x", "db1"), ("y", "db2")).toDF("v", "observed_in"), (2L, 1L)))
+    val c = cmp(kv, kv)
+    try for ((name, df, expected) <- frames) {
+      val old = df.groupBy("observed_in").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val (row, jobs) = withJobCount(c.summarize(name, df))
+      assert((row.rowsOnlyInDb1, row.rowsOnlyInDb2) == expected, name)
+      assert(row == DataDriftSummaryRow(name, "db1", old.getOrElse("db1", 0L),
+        "db2", old.getOrElse("db2", 0L)), name)
+      assert(jobs == 1, name)
+    } finally frames.foreach(_._2.unpersist())
+  }
+
   test("summaryDf drift counts are LongType (no 2^31 overflow) and survive > Int.MaxValue") {
     import org.apache.spark.sql.types.LongType
     val big = Int.MaxValue.toLong + 7L

@@ -10,18 +10,23 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the set of programs under src/main. Profiling goes through Bench,
   * ExplainQ and the perfbench harness, all under GraftSession's config; a
   * new `def main` would be a one-off driver with its own session and knobs.
+  * Also pins the registry's one table-read path, `Tables`.
   */
 class EntrypointSpec extends AnyFunSuite {
   private val owner =
     """(?m)^\s*(?:(?:private|final|abstract|sealed|case)\s+)*(?:object|class|trait)\s+(\w+)""".r
 
-  test("the only mains under src/main are GraftApp, Bench, Verify and ExplainQ") {
-    val root = Paths.get("src/main/scala")
+  /** Every `.scala` file under `dir`, relative to the repository root. */
+  private def sources(dir: String): List[java.nio.file.Path] = {
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
     val walk = Files.walk(root)
-    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    val owners = files.flatMap { f =>
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  test("the only mains under src/main are GraftApp, Bench, Verify and ExplainQ") {
+    val owners = sources("src/main/scala").flatMap { f =>
       val src = new String(Files.readAllBytes(f), UTF_8)
       "def main\\(".r.findAllMatchIn(src).map { m =>
         owner.findAllMatchIn(src.substring(0, m.start)).map(_.group(1)).toSeq
@@ -29,5 +34,11 @@ class EntrypointSpec extends AnyFunSuite {
       }
     }
     assert(owners.sorted == Seq("Bench", "ExplainQ", "GraftApp", "Verify"))
+  }
+
+  test("registry queries read tables through Tables, never with read.parquet") {
+    val direct = sources("src/main/scala/graft/registry")
+      .filter(f => new String(Files.readAllBytes(f), UTF_8).contains("read.parquet"))
+    assert(direct.isEmpty, s"read.parquet in ${direct.mkString(", ")}; use Tables.t")
   }
 }
