@@ -1,10 +1,13 @@
 package graft
 
+import scala.collection.mutable
+
 import graft.RootFormat._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
+  * A query that throws is reported as failed, never timed.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -55,10 +58,9 @@ object Bench {
       Thread.sleep(5000)
     val settleSec = (System.nanoTime() - settleStart) / 1e9
     val benchStart = System.nanoTime()
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    val samples = scala.collection.mutable.Map.empty[String, List[Double]]
-      .withDefaultValue(Nil)
+    val record = new Record(queries.map(_._1))
     // host-load marker taken before and after the sweep: lets a reader
     // adjudicate "was the host noisy?" without re-running (r12 published a
     // 0.6 s query as 130 s because nothing recorded contention)
@@ -68,42 +70,14 @@ object Bench {
     // the sweep) so a contention window is attributable to the round it
     // hit — the r16 q_naive_bayes burst took a separate quiescent rerun
     // to adjudicate; with per-round load the artifact self-documents it
-    val loadPerRound = scala.collection.mutable.ListBuffer.empty[Double]
+    val loadPerRound = mutable.ListBuffer.empty[Double]
     var round = 0
     var roundsDone = 0
     var firstRoundSec = 0.0
-    // min-of-N is the whole point of interleaved rounds: a single sample
-    // cannot distinguish host noise from a plan regression (BENCH_r12 ran
-    // one round at 223 queries because the fixed 420 s budget was smaller
-    // than one round's wall). So round 2 ALWAYS runs, and from round 3 on
-    // the gate uses an effective budget scaled to the measured first-round
-    // wall (>= 2.5x) so growth in query count can never re-create the
-    // single-sample artifact.
-    def render(): String = {
-      val loadNow = osBean.getSystemLoadAverage
-      val results = names.map { case (name, _) =>
-        val ts = samples(name).sorted
-        name -> ts(ts.length / 2)
-      }
-      val qs = results.map { case (k, v) => "\"" + k + "\":" + rf"$v%.3f" }
-        .mkString("{", ",", "}")
-      val total = results.map(_._2).sum
-      // min-of-rounds published alongside the median: single runs on this
-      // shared host spike 10-25x in noisy-neighbor windows (NOTES r11), so
-      // a per-query median >> min flags noise, not a plan regression — the
-      // artifact self-documents which spikes to distrust
-      val mins = names.map { case (name, _) => name -> samples(name).min }
-      val qsMin = mins.map { case (k, v) => "\"" + k + "\":" + rf"$v%.3f" }
-        .mkString("{", ",", "}")
-      val totalMin = mins.map(_._2).sum
-      // full per-query sample lists (newest-first) so a future reader can
-      // adjudicate noise vs regression from the artifact alone
-      val qsSamples = names.map { case (name, _) =>
-        "\"" + name + "\":[" +
-          samples(name).map(t => rf"$t%.3f").mkString(",") + "]"
-      }.mkString("{", ",", "}")
+    // the run's context fields, closing both JSON lines
+    def context(): String = {
       val loadRounds = loadPerRound.map(l => rf"$l%.2f").mkString("[", ",", "]")
-      rf"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"value_min":$totalMin%.3f,"queries_min":$qsMin,"samples":$qsSamples,"sf":"$sfDir","rounds":$roundsDone,"load_avg_before":$loadBefore%.2f,"load_avg_after":$loadNow%.2f,"load_per_round":$loadRounds,"settle_sec":$settleSec%.1f}"""
+      rf""""sf":"$sfDir","rounds":$roundsDone,"load_avg_before":$loadBefore%.2f,"load_avg_after":${osBean.getSystemLoadAverage}%.2f,"load_per_round":$loadRounds,"settle_sec":$settleSec%.1f}"""
     }
     // written after EVERY round (not just at exit): a harness that kills
     // a long multi-round run still finds the last completed round's
@@ -117,41 +91,26 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"bench_out write failed: ${e.getMessage}")
       }
-    // compact summary (≤1.5 KB): totals + top-20 queries by min-of-rounds;
-    // emitted as the very last stdout line so the driver's 2000-char
-    // stdout tail always contains one complete, parseable JSON object
-    def renderCompact(): String = {
-      val loadNow = osBean.getSystemLoadAverage
-      val med = names.map { case (name, _) =>
-        val ts = samples(name).sorted
-        name -> ts(ts.length / 2)
-      }
-      val mins = names.map { case (name, _) => name -> samples(name).min }
-      val top = mins.sortBy(-_._2).take(20).map(_._1).toSet
-      def m(kv: Seq[(String, Double)]): String = kv
-        .filter { case (k, _) => top.contains(k) }
-        .map { case (k, v) => "\"" + k + "\":" + rf"$v%.3f" }
-        .mkString("{", ",", "}")
-      val loadRounds = loadPerRound.map(l => rf"$l%.2f").mkString("[", ",", "]")
-      rf"""{"metric":"total","value":${med.map(_._2).sum}%.3f,"unit":"sec","queries":${m(med)},"value_min":${mins.map(_._2).sum}%.3f,"queries_min":${m(mins)},"n_queries":${names.length},"top":20,"full_map":"$outPath","sf":"$sfDir","rounds":$roundsDone,"load_avg_before":$loadBefore%.2f,"load_avg_after":$loadNow%.2f,"load_per_round":$loadRounds,"settle_sec":$settleSec%.1f}"""
-    }
+    // min-of-N is the whole point of interleaved rounds: a single sample
+    // cannot distinguish host noise from a plan regression (BENCH_r12 ran
+    // one round at 223 queries because the fixed 420 s budget was smaller
+    // than one round's wall). So round 2 ALWAYS runs, and from round 3 on
+    // the gate uses an effective budget scaled to the measured first-round
+    // wall (>= 2.5x) so growth in query count can never re-create the
+    // single-sample artifact.
     while (round < runs && {
       val elapsed = (System.nanoTime() - benchStart) / 1e9
       val effBudget = math.max(budgetSec, 2.5 * firstRoundSec)
       round < 2 || elapsed < effBudget
     }) {
-      names.foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        samples(name) = ((System.nanoTime() - t0) / 1e9) :: samples(name)
-      }
+      record.round(spark, sfDir, queries)
       round += 1
       roundsDone = round
       loadPerRound += osBean.getSystemLoadAverage
       if (round == 1) firstRoundSec = (System.nanoTime() - benchStart) / 1e9
-      persist(render())
+      persist(record.fullLine(context()))
     }
-    val json = render()
+    val json = record.fullLine(context())
     // full map first (archival; also persisted to bench_out.json below) …
     println(json)
     persist(json)
@@ -163,7 +122,90 @@ object Bench {
     // totals plus the top-20 queries by min-of-rounds (median and min
     // maps, same value semantics as the full line); the complete
     // per-query map stays in bench_out.json.
-    println(renderCompact())
+    println(record.compactLine(s""""full_map":"$outPath",""" + context()))
     spark.stop()
+  }
+
+  /** The hard cap on the compact line, the last stdout line: a reader
+    * that keeps only a ~2000-char tail of stdout still gets all of it.
+    */
+  val compactCap = 1500
+
+  /** Per-query timings over the bench's rounds. A query that throws is
+    * recorded as failed (its error goes to stderr), is not run again, and
+    * is left out of every timing map and total: a failure is not a fast
+    * query.
+    */
+  final class Record(names: Seq[String]) {
+    private val samples = mutable.Map.empty[String, List[Double]]
+    private val failures = mutable.LinkedHashSet.empty[String]
+
+    /** Times each query that has not failed once, with `.count()`. */
+    def round(spark: SparkSession, sfDir: String,
+              queries: Seq[(String, (SparkSession, String) => DataFrame)]): Unit =
+      queries.foreach { case (name, fn) =>
+        if (!failures(name)) {
+          val t0 = System.nanoTime()
+          try {
+            fn(spark, sfDir).count()
+            samples(name) = (System.nanoTime() - t0) / 1e9 :: samples.getOrElse(name, Nil)
+          } catch { case e: Throwable =>
+            System.err.println(s"bench: $name failed: $e")
+            failures += name
+            samples -= name
+          }
+        }
+      }
+
+    /** Failed queries, in the order they failed. */
+    def failed: Seq[String] = failures.toSeq
+
+    private def timed: Seq[String] = names.filter(samples.contains)
+    private def medians = timed.map { n => val ts = samples(n).sorted; n -> ts(ts.length / 2) }
+    // min-of-rounds published alongside the median: single runs on this
+    // shared host spike 10-25x in noisy-neighbor windows (NOTES r11), so
+    // a per-query median >> min flags noise, not a plan regression — the
+    // artifact self-documents which spikes to distrust
+    private def mins = timed.map(n => n -> samples(n).min)
+
+    private def secs(kv: Seq[(String, Double)]): String =
+      kv.map { case (k, v) => "\"" + k + "\":" + rf"$v%.3f" }.mkString("{", ",", "}")
+
+    /** The line's head: totals over the timed queries, the `shown` ones'
+      * medians and mins, and `n_failed` with the first `nFailed` names.
+      */
+    private def head(shown: String => Boolean, nFailed: Int): String = {
+      val (med, min) = (medians, mins)
+      def pick(kv: Seq[(String, Double)]) = secs(kv.filter { case (k, _) => shown(k) })
+      val names = failed.take(nFailed).map("\"" + _ + "\"").mkString("[", ",", "]")
+      rf"""{"metric":"total","value":${med.map(_._2).sum}%.3f,"unit":"sec","queries":${pick(med)},"value_min":${min.map(_._2).sum}%.3f,"queries_min":${pick(min)},"n_failed":${failed.size},"failed":$names,"""
+    }
+
+    /** Every query's median, min and samples (newest-first, so a reader can
+      * tell noise from a regression from the artifact alone) and every
+      * failed name; `context` closes the object.
+      */
+    def fullLine(context: String): String = {
+      val qsSamples = timed.map { n =>
+        "\"" + n + "\":" + samples(n).map(t => rf"$t%.3f").mkString("[", ",", "]")
+      }.mkString("{", ",", "}")
+      head(_ => true, failed.size) + s""""samples":$qsSamples,""" + context
+    }
+
+    /** The totals, as many failed names as fit, and the top (at most 20)
+      * queries by min-of-rounds, within [[compactCap]] chars; `context`
+      * closes the object. `top` is the count shown.
+      */
+    def compactLine(context: String): String = {
+      val slowest = mins.sortBy(-_._2).map(_._1)
+      def line(nFailed: Int, top: Int): String = {
+        val shown = slowest.take(top).toSet
+        head(shown, nFailed) +
+          s""""n_queries":${names.length},"top":${shown.size},""" + context
+      }
+      def fit(hi: Int)(f: Int => String): String =
+        (hi to 0 by -1).iterator.map(f).find(_.length <= compactCap).getOrElse(f(0))
+      fit(failed.size)(nf => fit(20)(top => line(nf, top)))
+    }
   }
 }

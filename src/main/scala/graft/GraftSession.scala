@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 /** One definition site for the session configuration every graft
   * entrypoint shares (r19, VERDICT item 5: the two r18 AQE settings
@@ -41,6 +41,19 @@ import org.apache.spark.sql.SparkSession
   * their shuffled BYTES are tiny (edit-distance verify, LSH verify,
   * percentile/window stages) opt out of byte-based coalescing locally
   * with explicit-width repartitions — see FuzzyJoin/Dedup/Stats.
+  *
+  * The builder injects one AQE query-stage preparation rule,
+  * [[SmallRangeSort]]: a global sort whose input is an already-shuffled
+  * stage of at most the advisory size plans its range exchange with one
+  * partition instead of `spark.sql.shuffle.partitions`. At n > 1
+  * `RangePartitioner` runs a sampling job that recomputes the whole stage
+  * under the sort, only for AQE to coalesce the sorted output back to one
+  * partition, because coalescing packs partitions up to the advisory
+  * size. Using the same advisory size as the threshold keeps the layout
+  * the one coalescing would have produced, drops the sampling job, and
+  * needs no setting of its own: raising `SPARK_GRAFT_SPLIT_BYTES` raises
+  * both together. The rule is added through `withExtensions`, not the
+  * `spark.sql.extensions` key, so a user's own extensions still load.
   */
 object GraftSession {
   /** Default core count / shuffle-partition ceiling from the env. */
@@ -51,12 +64,17 @@ object GraftSession {
     */
   def splitBytes: String = sys.env.getOrElse("SPARK_GRAFT_SPLIT_BYTES", "8m")
 
+  /** The session extensions every graft session installs. */
+  def extensions(e: SparkSessionExtensions): Unit =
+    e.injectQueryStagePrepRule(_ => SmallRangeSort)
+
   /** Builder with the shared graft configuration applied; callers add
     * their master/appName and any entrypoint-specific settings.
     */
   def builder(appName: String, nCpus: String = cpus): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
+      .withExtensions(extensions)
       .config("spark.sql.shuffle.partitions", nCpus)
       .config("spark.sql.files.maxPartitionBytes", splitBytes)
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", splitBytes)

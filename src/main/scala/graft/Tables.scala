@@ -18,11 +18,11 @@ object Tables {
     * nanos-since-epoch Long under the legacy flag) and TIMESTAMP(MICROS)
     * (read natively, as NTZ when isAdjustedToUTC=false). Normalize either
     * to a session-TZ TimestampType column — identical instants under the
-    * UTC session timezone every entrypoint sets.
+    * UTC session timezone every entrypoint sets. The legacy flag applies to
+    * this read only, so later reads in the session resolve as before.
     */
   def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = t(s, dir, "events")
+    val raw = graft.sources.ParquetSide.read(s, s"$dir/events.parquet", nanosAsLong = true)
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

@@ -206,6 +206,12 @@ final class DriftCompare(
     * (reference: lotad/queries/duckdb/db_compare_create_tmp_table_merge.sql).
     * Returns None when the sides share no columns
     * (reference: lotad/db_compare.py:337-339).
+    *
+    * Rows are compared by `hashed_row` alone, a 64-bit xxh64: two distinct
+    * rows with one hash count as the same row, so a row on one side can
+    * hide a different row on the other. Over n distinct rows the expected
+    * number of colliding pairs is n² / 2^65 (while small, also the chance
+    * p of any collision): about 3e-6 at 10^7 rows, 2.7 at 10^10.
     */
   def dataDrift(table: String): Option[DataFrame] =
     // Single-pass plan: each side is scanned and hashed exactly once, the
@@ -306,7 +312,8 @@ final class DriftCompare(
     * width x row count dwarfs a rescan (always, at the 100 TB design
     * point; parquet scans parallelize freely, shuffles do not). Correctness
     * rests on the canonical hash being collision-free across the table's
-    * distinct rows (128-bit md5: p ~ n^2 / 2^129).
+    * distinct rows. The hash is a 64-bit xxh64, so p ≈ n² / 2^65, the same
+    * bound as [[dataDrift]]'s: 2.7 expected colliding pairs at 10^10 rows.
     *
     * The differing-hash set is joined back WITHOUT a broadcast hint: its
     * size is data-dependent (two heavily-diverged sides approach full

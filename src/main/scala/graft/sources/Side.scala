@@ -8,6 +8,7 @@ import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** A "side" of a comparison: a named catalog of tables.
@@ -101,25 +102,37 @@ object ParquetSide {
     * every file's schema), or a path whose footer cannot be read or
     * converted goes to `spark.read.parquet`, so its schema and its errors
     * stay Spark's.
+    *
+    * `nanosAsLong` converts the footer as `spark.sql.legacy.parquet.nanosAsLong`
+    * would, for this one read: a TIMESTAMP(NANOS) column resolves to its
+    * raw nanos as a Long, which Spark's readers accept once the schema is
+    * given, and the session's own setting is left as it is.
     */
-  def read(spark: SparkSession, path: String): DataFrame =
-    footerSchema(spark, path) match {
+  def read(spark: SparkSession, path: String, nanosAsLong: Boolean = false): DataFrame =
+    footerSchema(spark, path, nanosAsLong) match {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None => spark.read.parquet(path)
     }
 
-  private def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+  private def footerSchema(spark: SparkSession, path: String,
+                           nanosAsLong: Boolean): Option[StructType] =
     if (path.exists("{}[]*?\\".contains(_)) ||
       spark.sessionState.conf.isParquetSchemaMergingEnabled) None
     else try {
       val conf = spark.sessionState.newHadoopConf()
       val p = new Path(path)
       val fs = p.getFileSystem(conf)
+      val sqlConf = spark.sessionState.conf
+      val readConf = if (!nanosAsLong) sqlConf else {
+        val c = sqlConf.clone()
+        c.setConf(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, true)
+        c
+      }
       schemaFile(fs, fs.getFileStatus(p)).map { f =>
         val footer = ParquetFooterReader.readFooter(
           HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
         ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
-          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+          new ParquetToSparkSchemaConverter(readConf))
       }
     } catch { case NonFatal(_) => None }
 

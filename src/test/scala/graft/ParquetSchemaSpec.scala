@@ -104,6 +104,19 @@ class ParquetSchemaSpec extends SparkSpecBase {
     }
   }
 
+  test("Tables.events reads a NANOS ts for itself: Tables.t on the file throws before and after") {
+    withNanosAsLong(on = false) {
+      val dir = new java.io.File(nanosFile).getParent
+      intercept[Exception](Tables.t(spark, dir, "events"))
+      val events = Tables.events(spark, dir)
+      assert(events.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+      assert(events.orderBy("event_id").select(unix_timestamp($"ts")).as[Long].collect().toSeq ==
+        Seq(1L, 2L, 3L))
+      assert(spark.conf.get(nanosKey) == "false")
+      intercept[Exception](Tables.t(spark, dir, "events"))
+    }
+  }
+
   test("ParquetSide schemas and Tables.t run no Spark job; inference runs one per table") {
     val side = ParquetSide(spark, sfDir, "x")
     val names = side.listTables()

@@ -8,6 +8,7 @@ object TestSpark {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
+      .withExtensions(GraftSession.extensions)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",
