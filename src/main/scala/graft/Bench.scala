@@ -131,6 +131,13 @@ object Bench {
     */
   val compactCap = 1500
 
+  /** The middle sample, or the mean of the two middle samples of an even count. */
+  def median(xs: Seq[Double]): Double = {
+    val ts = xs.sorted
+    val m = ts.length / 2
+    if (ts.length % 2 == 1) ts(m) else (ts(m - 1) + ts(m)) / 2
+  }
+
   /** Per-query timings over the bench's rounds. A query that throws is
     * recorded as failed (its error goes to stderr), is not run again, and
     * is left out of every timing map and total: a failure is not a fast
@@ -161,7 +168,7 @@ object Bench {
     def failed: Seq[String] = failures.toSeq
 
     private def timed: Seq[String] = names.filter(samples.contains)
-    private def medians = timed.map { n => val ts = samples(n).sorted; n -> ts(ts.length / 2) }
+    private def medians = timed.map(n => n -> median(samples(n)))
     // min-of-rounds published alongside the median: single runs on this
     // shared host spike 10-25x in noisy-neighbor windows (NOTES r11), so
     // a per-query median >> min flags noise, not a plan regression — the

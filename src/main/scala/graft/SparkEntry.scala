@@ -141,9 +141,7 @@ object SparkEntry {
       val c = new DriftCompare(s,
         MemorySide("db1", Map("lineitem" -> li.unionByName(li.filter("l_orderkey % 7 = 0")))),
         MemorySide("db2", Map("lineitem" -> li)))
-      // auto-dispatch: lineitem (16 cols) is wide, so this takes the
-      // hashed path — plan-asserted in PlanAuditSpec
-      c.dataDriftBagAuto("lineitem").get.drop("hashed_row")
+      c.dataDriftBag("lineitem").get.drop("hashed_row")
         .orderBy("l_orderkey", "l_linenumber")
     }),
 

@@ -1,13 +1,13 @@
 package graft.functions
 
-import java.nio.charset.StandardCharsets
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.Arrays
 
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.JsonNodeType
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
@@ -31,6 +31,26 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `1`, `"1"` and `1.0`-vs-`"1.0"` compare type-insensitively
   *    (reference: lotad/utils.py:76-77).
   *
+  * One writer per type, compiled once by [[writerFor]], appends a value's
+  * canonical form as UTF-8 to a thread-local byte buffer. Top-level struct
+  * fields, nested struct/array/map values and parsed JSON nodes all go
+  * through it. A struct, array or map is built as JSON at the end of the
+  * buffer, hashed there, and replaced by the hash's 16 hex digits, so a
+  * nested value hashes in its own region and its parent sees only the
+  * hex. JSON escaping (orjson's: `"`, `\` and control characters) is
+  * applied to the UTF-8 bytes on the way into a JSON string literal; a
+  * struct's fields are escaped as they are written, straight from the
+  * `UTF8String` bytes.
+  *
+  * Array elements and object keys are sorted as raw UTF-8 byte ranges,
+  * unsigned. That is code-point order. Equal code points encode to equal
+  * bytes, so the first differing byte falls in the first differing code
+  * point. There a longer encoding has the larger lead byte (0xxxxxxx <
+  * 110xxxxx < 1110xxxx < 11110xxx), and encodings of one length spell the
+  * code point's bits high to low, so the bytes order the two code points
+  * as their values do. (UTF-16 order differs: `😀` U+1F600 is stored as
+  * D83D DE00 and sorts before `｡` U+FF61 there.)
+  *
   * Unlike the reference (a per-row Python UDF behind a DuckDB FFI), this is
   * a JVM Catalyst expression evaluated inline in the task: no FFI, no
   * driver round-trip, and it consumes Spark's InternalRow directly — no
@@ -40,91 +60,105 @@ object CanonicalHash {
 
   private val mapper = new ObjectMapper()
 
-  private val HEX = "0123456789abcdef".toCharArray
+  private val HEX = "0123456789abcdef".getBytes(UTF_8)
 
-  /** xxh64 (seed 0) hexdigest, matching `xxhash.xxh64(..).hexdigest()`. */
-  def xxh64Hex(bytes: Array[Byte]): String = xxh64Hex(bytes, bytes.length)
-
-  def xxh64Hex(bytes: Array[Byte], len: Int): String = {
-    val h = XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET, len, 0L)
-    val out = new Array[Char](16)
-    var i = 0
-    while (i < 16) {
-      out(i) = HEX(((h >>> ((15 - i) * 4)) & 0xf).toInt)
-      i += 1
-    }
-    new String(out)
-  }
-
-  /** Growable byte buffer for zero-Formatter, single-copy JSON assembly. */
-  private final class ByteBuf(init: Int) {
-    var arr = new Array[Byte](init)
+  /** Growable byte buffer the canonical forms and row JSON are written to. */
+  private final class ByteBuf {
+    var arr = new Array[Byte](256)
     var len = 0
-    def reset(): Unit = len = 0
     private def ensure(n: Int): Unit =
       if (len + n > arr.length)
-        arr = java.util.Arrays.copyOf(arr, math.max(arr.length * 2, len + n))
+        arr = Arrays.copyOf(arr, math.max(arr.length * 2, len + n))
     def add(b: Int): Unit = { ensure(1); arr(len) = b.toByte; len += 1 }
-    def addBytes(src: Array[Byte]): Unit = {
-      ensure(src.length); System.arraycopy(src, 0, arr, len, src.length); len += src.length
-    }
-    /** Append `s` with orjson-compatible JSON string escaping, UTF-8 encoded. */
-    def addEscaped(s: String): Unit = {
-      ensure(s.length + 8)
+    def addBytes(src: Array[Byte]): Unit =
+      addUtf8(src, Platform.BYTE_ARRAY_OFFSET, src.length, esc = false)
+    def addAscii(s: String): Unit = {
       var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (c < 0x80) {
-          if (c == '"') { add('\\'); add('"') }
-          else if (c == '\\') { add('\\'); add('\\') }
-          else if (c >= ' ') add(c)
-          else c match {
-            case '\b' => add('\\'); add('b')
-            case '\t' => add('\\'); add('t')
-            case '\n' => add('\\'); add('n')
-            case '\f' => add('\\'); add('f')
-            case '\r' => add('\\'); add('r')
-            case _ =>
-              add('\\'); add('u'); add('0'); add('0')
-              add(HEX((c >> 4) & 0xf)); add(HEX(c & 0xf))
+      while (i < s.length) { add(s.charAt(i)); i += 1 }
+    }
+    def addText(s: String, esc: Boolean): Unit = {
+      val b = s.getBytes(UTF_8)
+      addUtf8(b, Platform.BYTE_ARRAY_OFFSET, b.length, esc)
+    }
+
+    /** Append the `n` UTF-8 bytes at `off` of `base`, escaped for the
+      * inside of a JSON string literal when `esc` (orjson's escaping:
+      * `"`, `\` and the control characters; bytes of multi-byte sequences
+      * have the high bit set and pass through).
+      */
+    def addUtf8(base: AnyRef, off: Long, n: Int, esc: Boolean): Unit = {
+      ensure(n)
+      if (!esc) {
+        Platform.copyMemory(base, off, arr, Platform.BYTE_ARRAY_OFFSET + len, n)
+        len += n
+        return
+      }
+      var i = 0
+      while (i < n) {
+        val b = Platform.getByte(base, off + i)
+        if (b < 0 || (b >= 0x20 && b != '"' && b != '\\')) add(b)
+        else {
+          add('\\')
+          b match {
+            case '"' => add('"')
+            case '\\' => add('\\')
+            case 0x08 => add('b')
+            case 0x09 => add('t')
+            case 0x0a => add('n')
+            case 0x0c => add('f')
+            case 0x0d => add('r')
+            case _ => add('u'); add('0'); add('0'); add(HEX(b >> 4)); add(HEX(b & 0xf))
           }
-          i += 1
-        } else {
-          val cp = s.codePointAt(i)
-          if (cp < 0x800) {
-            add(0xc0 | (cp >> 6)); add(0x80 | (cp & 0x3f))
-          } else if (cp < 0x10000) {
-            add(0xe0 | (cp >> 12))
-            add(0x80 | ((cp >> 6) & 0x3f))
-            add(0x80 | (cp & 0x3f))
-          } else {
-            add(0xf0 | (cp >> 18))
-            add(0x80 | ((cp >> 12) & 0x3f))
-            add(0x80 | ((cp >> 6) & 0x3f))
-            add(0x80 | (cp & 0x3f))
-          }
-          i += Character.charCount(cp)
         }
+        i += 1
       }
     }
+
+    /** Replace everything from `start` by the xxh64 hex of the bytes from `json`. */
+    def replaceWithHash(start: Int, json: Int): Unit = {
+      val h = XXH64.hashUnsafeBytes(arr, Platform.BYTE_ARRAY_OFFSET + json, len - json, 0L)
+      len = start
+      var i = 15
+      while (i >= 0) { add(HEX(((h >>> (i * 4)) & 0xf).toInt)); i -= 1 }
+    }
   }
 
-  /** Direct byte writer for a field value inside the row-JSON assembly:
-    * scalars emit their canonical bytes with no intermediate String where
-    * practical; nested/JSON-ish values fall back to the generic canon.
+  private val local = ThreadLocal.withInitial[ByteBuf](() => new ByteBuf)
+
+  /** The thread's buffer, emptied. */
+  private def emptyBuf(): ByteBuf = {
+    val buf = local.get()
+    buf.len = 0
+    buf
+  }
+
+  /** xxh64 (seed 0) hexdigest, matching `xxhash.xxh64(..).hexdigest()`. */
+  def xxh64Hex(bytes: Array[Byte]): String = {
+    val buf = emptyBuf()
+    buf.addBytes(bytes)
+    buf.replaceWithHash(0, 0)
+    new String(buf.arr, 0, buf.len, UTF_8)
+  }
+
+  /** Writes a non-null value's canonical form; `esc` when it lands inside a
+    * JSON string literal. Only string forms can hold bytes that need
+    * escaping: numbers, dates, hashes and the like are plain ASCII.
     */
-  private type CanonW = (Any, ByteBuf) => Unit
+  private trait Writer { def write(v: Any, buf: ByteBuf, esc: Boolean): Unit }
 
-  private def addAscii(buf: ByteBuf, s: String): Unit = {
-    var i = 0
-    while (i < s.length) { buf.add(s.charAt(i)); i += 1 }
-  }
+  private def put(w: Writer, v: Any, buf: ByteBuf, esc: Boolean): Unit =
+    if (v == null) buf.addAscii("None") else w.write(v, buf, esc)
 
+  /** `v` zero-padded to `width` digits. A negative `v` (a year before 1)
+    * renders digit by digit, e.g. "000+" for -5: Python cannot represent
+    * such a year, so there is no reference value, and these are the bytes
+    * stored hashes already hold.
+    */
   private def addPad(buf: ByteBuf, v: Int, width: Int): Unit = {
     var div = 1
     var i = 1
     while (i < width) { div *= 10; i += 1 }
-    if (v >= div * 10) { addAscii(buf, v.toString); return } // wider than field
+    if (v >= div * 10) { buf.addAscii(v.toString); return } // wider than field
     while (div > 0) {
       buf.add('0' + (v / div) % 10)
       div /= 10
@@ -133,15 +167,15 @@ object CanonicalHash {
 
   /** Python `str(float)` written directly into the buffer: same rendering
     * as [[PyFormat.pyDouble]] (a property spec asserts equality) but with
-    * zero allocation beyond the JDK's `Double.toString` — no substring /
-    * StringBuilder / re-encode per value, which matters when hashing
+    * zero allocation beyond the JDK's `Double.toString` — no substring,
+    * builder or re-encode per value, which matters when hashing
     * billions of double fields.
     */
   private[functions] def addPyDouble(buf: ByteBuf, d: Double): Unit = {
-    if (java.lang.Double.isNaN(d)) { addAscii(buf, "nan"); return }
-    if (d == Double.PositiveInfinity) { addAscii(buf, "inf"); return }
-    if (d == Double.NegativeInfinity) { addAscii(buf, "-inf"); return }
-    if (d == 0.0) { addAscii(buf, if (1.0 / d < 0) "-0.0" else "0.0"); return }
+    if (java.lang.Double.isNaN(d)) { buf.addAscii("nan"); return }
+    if (d == Double.PositiveInfinity) { buf.addAscii("inf"); return }
+    if (d == Double.NegativeInfinity) { buf.addAscii("-inf"); return }
+    if (d == 0.0) { buf.addAscii(if (1.0 / d < 0) "-0.0" else "0.0"); return }
     if (d < 0) buf.add('-')
     val s = java.lang.Double.toString(math.abs(d))
     val eIdx = s.indexOf('E')
@@ -190,7 +224,7 @@ object CanonicalHash {
       buf.add('e')
       if (fde >= 0) buf.add('+') else buf.add('-')
       val ae = math.abs(fde)
-      if (ae < 100) addPad(buf, ae, 2) else addAscii(buf, ae.toString)
+      if (ae < 100) addPad(buf, ae, 2) else buf.addAscii(ae.toString)
     } else if (fde >= 0) { // fixed, >= 1
       if (n > fde + 1) {
         val i = emitDigits(dStart, fde + 1)
@@ -200,299 +234,203 @@ object CanonicalHash {
         emitDigits(dStart, n)
         var i = n
         while (i <= fde) { buf.add('0'); i += 1 }
-        addAscii(buf, ".0")
+        buf.addAscii(".0")
       }
     } else { // fixed, < 1: 0.00ddd
-      addAscii(buf, "0.")
+      buf.addAscii("0.")
       var i = -1
       while (i > fde) { buf.add('0'); i -= 1 }
       emitDigits(dStart, n)
     }
   }
 
-  private def writerFor(dt: DataType): CanonW = dt match {
-    case ByteType | ShortType | IntegerType | LongType =>
-      (v, buf) =>
-        if (v == null) addAscii(buf, "None")
-        else addAscii(buf, v.toString)
-    case BooleanType =>
-      (v, buf) =>
-        if (v == null) addAscii(buf, "None")
-        else addAscii(buf, if (v.asInstanceOf[Boolean]) "True" else "False")
-    case DoubleType =>
-      (v, buf) =>
-        if (v == null) addAscii(buf, "None")
-        else addPyDouble(buf, v.asInstanceOf[Double])
-    case FloatType =>
-      (v, buf) =>
-        if (v == null) addAscii(buf, "None")
-        else addPyDouble(buf, v.asInstanceOf[Float].toDouble)
-    case TimestampType | TimestampNTZType =>
-      (v, buf) =>
-        if (v == null) addAscii(buf, "None")
-        else {
-          val micros = v.asInstanceOf[Long]
-          val days = Math.floorDiv(micros, 86400000000L)
-          val rem = Math.floorMod(micros, 86400000000L)
-          val ld = java.time.LocalDate.ofEpochDay(days)
-          val secOfDay = (rem / 1000000L).toInt
-          val us = (rem % 1000000L).toInt
-          addPad(buf, ld.getYear, 4); buf.add('-')
-          addPad(buf, ld.getMonthValue, 2); buf.add('-')
-          addPad(buf, ld.getDayOfMonth, 2); buf.add(' ')
-          addPad(buf, secOfDay / 3600, 2); buf.add(':')
-          addPad(buf, (secOfDay / 60) % 60, 2); buf.add(':')
-          addPad(buf, secOfDay % 60, 2)
-          if (us != 0) { buf.add('.'); addPad(buf, us, 6) }
-        }
-    case StringType =>
-      (v, buf) =>
-        if (v == null) addAscii(buf, "None")
-        else {
-          val u = v.asInstanceOf[UTF8String]
-          val n = u.numBytes()
-          val b0 = if (n > 0) u.getByte(0) else 0
-          if (b0 == '{' || b0 == '[' || b0 == '%')
-            buf.addEscaped(canonicalString(u.toString)) // may parse as JSON
-          else {
-            // fast path: escape-scan the raw UTF-8 bytes (multi-byte
-            // sequences have the high bit set and pass through untouched)
-            var i = 0
-            while (i < n) {
-              val b = u.getByte(i)
-              if (b < 0 || (b >= 0x20 && b != '"' && b != '\\')) buf.add(b)
-              else if (b == '"') { buf.add('\\'); buf.add('"') }
-              else if (b == '\\') { buf.add('\\'); buf.add('\\') }
-              else b match {
-                case 0x08 => buf.add('\\'); buf.add('b')
-                case 0x09 => buf.add('\\'); buf.add('t')
-                case 0x0a => buf.add('\\'); buf.add('n')
-                case 0x0c => buf.add('\\'); buf.add('f')
-                case 0x0d => buf.add('\\'); buf.add('r')
-                case _ =>
-                  buf.add('\\'); buf.add('u'); buf.add('0'); buf.add('0')
-                  buf.add(HEX((b >> 4) & 0xf)); buf.add(HEX(b & 0xf))
-              }
-              i += 1
-            }
-          }
-        }
-    case other =>
-      val c = compile(other)
-      (v, buf) => buf.addEscaped(c(v))
-  }
-
-  /** Append `s` as a JSON string literal (orjson-compatible escaping:
-    * minimal ASCII escapes, raw UTF-8 for non-ASCII).
-    */
-  private def appendJsonString(sb: StringBuilder, s: String): Unit = {
-    sb.append('"')
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      c match {
-        case '"'  => sb.append("\\\"")
-        case '\\' => sb.append("\\\\")
-        case '\b' => sb.append("\\b")
-        case '\t' => sb.append("\\t")
-        case '\n' => sb.append("\\n")
-        case '\f' => sb.append("\\f")
-        case '\r' => sb.append("\\r")
-        case c if c < ' ' =>
-          sb.append("\\u00")
-          sb.append(HEX((c >> 4) & 0xf))
-          sb.append(HEX(c & 0xf))
-        case c => sb.append(c)
-      }
-      i += 1
-    }
-    sb.append('"')
-  }
-
-  /** Hash a canonicalized object: sorted (key -> canonical-value-string)
-    * pairs serialized as compact JSON, then xxh64.
-    */
-  private def hashObject(sorted: Seq[(String, String)]): String = {
-    val sb = new StringBuilder
-    sb.append('{')
-    var first = true
-    sorted.foreach { case (k, v) =>
-      if (!first) sb.append(',')
-      first = false
-      appendJsonString(sb, k)
-      sb.append(':')
-      appendJsonString(sb, v)
-    }
-    sb.append('}')
-    xxh64Hex(sb.toString.getBytes(StandardCharsets.UTF_8))
-  }
-
-  /** Hash a canonicalized list: element canonical strings SORTED then
-    * serialized as a compact JSON list, then xxh64. Sorting makes array
-    * order irrelevant (reference: lotad/utils.py:66-74).
-    */
-  private def hashList(elems: Array[String]): String = {
-    java.util.Arrays.sort(elems, PyFormat.cpOrdering)
-    val sb = new StringBuilder
-    sb.append('[')
-    var i = 0
-    while (i < elems.length) {
-      if (i > 0) sb.append(',')
-      appendJsonString(sb, elems(i))
-      i += 1
-    }
-    sb.append(']')
-    xxh64Hex(sb.toString.getBytes(StandardCharsets.UTF_8))
-  }
-
-  private def looksLikeJson(s: String): Boolean =
-    s.startsWith("{") || s.startsWith("[") || s.startsWith("%7B")
-
-  /** Canonical string for a plain string value: parse-and-recurse when it
-    * looks like (possibly URL-encoded) JSON, else the string itself.
-    */
-  def canonicalString(s: String): String = {
-    if (!looksLikeJson(s)) return s
-    val candidate = if (s.startsWith("%7B")) PyFormat.urlUnquote(s) else s
-    try canonicalJson(mapper.readTree(candidate))
-    catch { case _: Exception => s }
-  }
-
-  /** Canonical string of a parsed JSON node. */
-  def canonicalJson(node: JsonNode): String = node.getNodeType match {
-    case JsonNodeType.OBJECT =>
-      val keys = scala.collection.mutable.ArrayBuffer.empty[String]
-      val it = node.fieldNames()
-      while (it.hasNext) keys += it.next()
-      val sorted = keys.sortWith(PyFormat.cpCompare(_, _) < 0)
-      hashObject(sorted.map(k => k -> canonicalJson(node.get(k))).toSeq)
-    case JsonNodeType.ARRAY =>
-      val out = new Array[String](node.size())
-      var i = 0
-      while (i < out.length) { out(i) = canonicalJson(node.get(i)); i += 1 }
-      hashList(out)
-    case JsonNodeType.STRING  => canonicalString(node.textValue())
-    case JsonNodeType.BOOLEAN => if (node.booleanValue()) "True" else "False"
-    case JsonNodeType.NULL    => "None"
-    case JsonNodeType.NUMBER =>
-      if (node.isIntegralNumber) node.bigIntegerValue().toString
-      else PyFormat.pyDouble(node.doubleValue())
-    case _ => node.asText()
-  }
-
-  private def pad(sb: java.lang.StringBuilder, v: Int, width: Int): Unit = {
-    var div = 1
-    var i = 1
-    while (i < width) { div *= 10; i += 1 }
-    while (div > 1 && v < div) { sb.append('0'); div /= 10 }
-    if (v > 0 || div == 1) sb.append(v)
-  }
-
-  private def tsString(micros: Long): String = {
+  /** Python `str(datetime)`: `YYYY-MM-DD HH:MM:SS[.ffffff]`. */
+  private def addTimestamp(buf: ByteBuf, micros: Long): Unit = {
     val days = Math.floorDiv(micros, 86400000000L)
     val rem = Math.floorMod(micros, 86400000000L)
     val ld = java.time.LocalDate.ofEpochDay(days)
     val secOfDay = (rem / 1000000L).toInt
     val us = (rem % 1000000L).toInt
-    val sb = new java.lang.StringBuilder(26)
-    pad(sb, ld.getYear, 4); sb.append('-')
-    pad(sb, ld.getMonthValue, 2); sb.append('-')
-    pad(sb, ld.getDayOfMonth, 2); sb.append(' ')
-    pad(sb, secOfDay / 3600, 2); sb.append(':')
-    pad(sb, (secOfDay / 60) % 60, 2); sb.append(':')
-    pad(sb, secOfDay % 60, 2)
-    if (us != 0) { sb.append('.'); pad(sb, us, 6) }
-    sb.toString
+    addPad(buf, ld.getYear, 4); buf.add('-')
+    addPad(buf, ld.getMonthValue, 2); buf.add('-')
+    addPad(buf, ld.getDayOfMonth, 2); buf.add(' ')
+    addPad(buf, secOfDay / 3600, 2); buf.add(':')
+    addPad(buf, (secOfDay / 60) % 60, 2); buf.add(':')
+    addPad(buf, secOfDay % 60, 2)
+    if (us != 0) { buf.add('.'); addPad(buf, us, 6) }
   }
 
-  private def dateString(days: Int): String =
-    java.time.LocalDate.ofEpochDay(days.toLong).toString
-
-  /** Canonical string of a Spark internal value of the given type
-    * (convenience wrapper; hot paths use [[compile]]).
+  /** Replace the canonical forms written from `start`, the i-th ending at
+    * `ends(i)`, by the hash of their compact JSON: a list in byte order,
+    * or with `pairs` an object of (even form: odd form) in byte order of
+    * the keys. The sort is stable, so equal map keys keep their order.
     */
-  def canonicalSpark(value: Any, dt: DataType): String = compile(dt)(value)
-
-  type Canon = Any => String
-
-  /** Compile a per-DataType canonicalizer once, so the per-row hot path is
-    * free of type dispatch: struct field order is pre-sorted, field-name
-    * JSON fragments are pre-escaped, and scalar paths are direct closures.
-    */
-  def compile(dt: DataType): Canon = {
-    val c = compileNonNull(dt)
-    v => if (v == null) "None" else c(v)
+  private def addSortedHash(buf: ByteBuf, start: Int, ends: Array[Int], pairs: Boolean): Unit = {
+    val src = buf.arr // the JSON is appended after the forms, so src stays intact
+    def from(r: Int) = if (r == 0) start else ends(r - 1)
+    def quoted(r: Int): Unit = {
+      buf.add('"')
+      buf.addUtf8(src, Platform.BYTE_ARRAY_OFFSET + from(r), ends(r) - from(r), esc = true)
+      buf.add('"')
+    }
+    val stride = if (pairs) 2 else 1
+    val order = Array.tabulate[Integer](ends.length / stride)(_ * stride)
+    Arrays.sort(order, (a: Integer, b: Integer) =>
+      Arrays.compareUnsigned(src, from(a), ends(a), src, from(b), ends(b)))
+    val json = buf.len
+    buf.add(if (pairs) '{' else '[')
+    var k = 0
+    while (k < order.length) {
+      if (k > 0) buf.add(',')
+      quoted(order(k))
+      if (pairs) { buf.add(':'); quoted(order(k) + 1) }
+      k += 1
+    }
+    buf.add(if (pairs) '}' else ']')
+    buf.replaceWithHash(start, json)
   }
 
-  private def compileNonNull(dt: DataType): Canon = dt match {
-    case StringType => v => canonicalString(v.asInstanceOf[UTF8String].toString)
-    case BooleanType => v => if (v.asInstanceOf[Boolean]) "True" else "False"
-    case ByteType | ShortType | IntegerType | LongType => v => v.toString
-    case FloatType => v => PyFormat.pyDouble(v.asInstanceOf[Float].toDouble)
-    case DoubleType => v => PyFormat.pyDouble(v.asInstanceOf[Double])
-    case _: DecimalType => v => PyFormat.pyDouble(v.asInstanceOf[Decimal].toDouble)
-    case DateType => v => dateString(v.asInstanceOf[Int])
-    case TimestampType | TimestampNTZType => v => tsString(v.asInstanceOf[Long])
-    case BinaryType =>
-      v => java.util.Base64.getEncoder.encodeToString(v.asInstanceOf[Array[Byte]])
-    case st: StructType =>
-      // pre-sort fields; pre-render `,"name":"` fragments as UTF-8 bytes;
-      // assemble the row JSON in a reused thread-local byte buffer — no
-      // StringBuilder, no String, no second UTF-8 encode per row. Scalar
-      // field values write their bytes directly (see writerFor).
-      val fields = st.fields.zipWithIndex
-        .map { case (f, i) => (f.name, i, writerFor(f.dataType), f.dataType) }
-        .sortWith((a, b) => PyFormat.cpCompare(a._1, b._1) < 0)
-      val keyFrags = fields.zipWithIndex.map { case ((name, _, _, _), i) =>
-        val sb = new StringBuilder
-        if (i > 0) sb.append(',')
-        appendJsonString(sb, name)
-        sb.append(':').append('"')
-        sb.toString.getBytes(StandardCharsets.UTF_8)
+  private def looksLikeJson(s: String): Boolean =
+    s.startsWith("{") || s.startsWith("[") || s.startsWith("%7B")
+
+  /** A string's canonical form: the parsed JSON's when it looks like
+    * (possibly URL-encoded) JSON and parses, else the string itself.
+    */
+  private def writeString(s: String, buf: ByteBuf, esc: Boolean): Unit = {
+    val node =
+      if (!looksLikeJson(s)) null
+      else try mapper.readTree(if (s.startsWith("%7B")) PyFormat.urlUnquote(s) else s)
+      catch { case _: Exception => null }
+    if (node == null) buf.addText(s, esc) else writeJson(node, buf, esc)
+  }
+
+  private def writeJson(node: JsonNode, buf: ByteBuf, esc: Boolean): Unit = node.getNodeType match {
+    case JsonNodeType.OBJECT =>
+      val start = buf.len
+      val ends = new Array[Int](2 * node.size())
+      val it = node.fieldNames()
+      var i = 0
+      while (it.hasNext) {
+        val k = it.next()
+        buf.addText(k, esc = false); ends(i) = buf.len
+        writeJson(node.get(k), buf, esc = false); ends(i + 1) = buf.len
+        i += 2
       }
-      val local = ThreadLocal.withInitial[ByteBuf](() => new ByteBuf(256))
-      v => {
+      addSortedHash(buf, start, ends, pairs = true)
+    case JsonNodeType.ARRAY =>
+      val start = buf.len
+      val ends = new Array[Int](node.size())
+      var i = 0
+      while (i < ends.length) { writeJson(node.get(i), buf, esc = false); ends(i) = buf.len; i += 1 }
+      addSortedHash(buf, start, ends, pairs = false)
+    case JsonNodeType.STRING  => writeString(node.textValue(), buf, esc)
+    case JsonNodeType.BOOLEAN => buf.addAscii(if (node.booleanValue()) "True" else "False")
+    case JsonNodeType.NULL    => buf.addAscii("None")
+    case JsonNodeType.NUMBER =>
+      if (node.isIntegralNumber) buf.addAscii(node.bigIntegerValue().toString)
+      else addPyDouble(buf, node.doubleValue())
+    case _ => buf.addText(node.asText(), esc)
+  }
+
+  /** The writer for non-null values of `dt`, compiled once so the per-row
+    * path is free of type dispatch: struct fields are pre-sorted and their
+    * `,"name":"` fragments pre-escaped.
+    */
+  private def writerFor(dt: DataType): Writer = dt match {
+    case StringType =>
+      (v, buf, esc) => {
+        val u = v.asInstanceOf[UTF8String]
+        val b0 = if (u.numBytes() > 0) u.getByte(0) else 0
+        // decode to a String only what may be JSON
+        if (b0 == '{' || b0 == '[' || b0 == '%') writeString(u.toString, buf, esc)
+        else buf.addUtf8(u.getBaseObject, u.getBaseOffset, u.numBytes(), esc)
+      }
+    case BooleanType => (v, buf, _) => buf.addAscii(if (v.asInstanceOf[Boolean]) "True" else "False")
+    case ByteType | ShortType | IntegerType | LongType => (v, buf, _) => buf.addAscii(v.toString)
+    case FloatType => (v, buf, _) => addPyDouble(buf, v.asInstanceOf[Float].toDouble)
+    case DoubleType => (v, buf, _) => addPyDouble(buf, v.asInstanceOf[Double])
+    case _: DecimalType => (v, buf, _) => addPyDouble(buf, v.asInstanceOf[Decimal].toDouble)
+    case DateType =>
+      (v, buf, _) => buf.addAscii(java.time.LocalDate.ofEpochDay(v.asInstanceOf[Int].toLong).toString)
+    case TimestampType | TimestampNTZType => (v, buf, _) => addTimestamp(buf, v.asInstanceOf[Long])
+    case BinaryType =>
+      (v, buf, _) => buf.addBytes(java.util.Base64.getEncoder.encode(v.asInstanceOf[Array[Byte]]))
+    case st: StructType =>
+      val names = st.fields.map(_.name.getBytes(UTF_8))
+      val ords = st.fields.indices.toArray
+        .sortWith((a, b) => Arrays.compareUnsigned(names(a), names(b)) < 0)
+      val types = ords.map(st.fields(_).dataType)
+      val writers = types.map(writerFor)
+      val keyFrags = ords.indices.map { i =>
+        val b = new ByteBuf
+        if (i > 0) b.add(',')
+        b.add('"'); b.addText(st.fields(ords(i)).name, esc = true); b.addAscii("\":\"")
+        Arrays.copyOf(b.arr, b.len)
+      }.toArray
+      (v, buf, _) => {
         val row = v.asInstanceOf[InternalRow]
-        val buf = local.get()
-        buf.reset()
+        val start = buf.len
         buf.add('{')
         var i = 0
-        while (i < fields.length) {
+        while (i < ords.length) {
           buf.addBytes(keyFrags(i))
-          val (_, ord, writer, fdt) = fields(i)
-          writer(row.get(ord, fdt), buf)
+          put(writers(i), row.get(ords(i), types(i)), buf, esc = true)
           buf.add('"')
           i += 1
         }
         buf.add('}')
-        xxh64Hex(buf.arr, buf.len)
+        buf.replaceWithHash(start, start)
       }
     case at: ArrayType =>
-      val elemCanon = compile(at.elementType)
       val et = at.elementType
-      v => {
-        val arr = v.asInstanceOf[ArrayData]
-        val out = new Array[String](arr.numElements())
+      val w = writerFor(et)
+      (v, buf, _) => {
+        val a = v.asInstanceOf[ArrayData]
+        val start = buf.len
+        val ends = new Array[Int](a.numElements())
         var i = 0
-        while (i < out.length) {
-          out(i) = elemCanon(arr.get(i, et))
-          i += 1
-        }
-        hashList(out)
+        while (i < ends.length) { put(w, a.get(i, et), buf, esc = false); ends(i) = buf.len; i += 1 }
+        addSortedHash(buf, start, ends, pairs = false)
       }
     case mt: MapType =>
-      val kCanon = compile(mt.keyType)
-      val vCanon = compile(mt.valueType)
-      v => {
+      val (kw, vw) = (writerFor(mt.keyType), writerFor(mt.valueType))
+      (v, buf, _) => {
         val m = v.asInstanceOf[MapData]
-        val ks = m.keyArray()
-        val vs = m.valueArray()
-        val pairs = (0 until m.numElements()).map { i =>
-          kCanon(ks.get(i, mt.keyType)) -> vCanon(vs.get(i, mt.valueType))
+        val (ks, vs) = (m.keyArray(), m.valueArray())
+        val start = buf.len
+        val ends = new Array[Int](2 * m.numElements())
+        var i = 0
+        while (i < m.numElements()) {
+          put(kw, ks.get(i, mt.keyType), buf, esc = false); ends(2 * i) = buf.len
+          put(vw, vs.get(i, mt.valueType), buf, esc = false); ends(2 * i + 1) = buf.len
+          i += 1
         }
-        hashObject(pairs.sortWith((a, b) => PyFormat.cpCompare(a._1, b._1) < 0))
+        addSortedHash(buf, start, ends, pairs = true)
       }
-    case _ => v => v.toString
+    case _ => (v, buf, esc) => buf.addText(v.toString, esc)
+  }
+
+  /** Compile the canonicalizer of type `dt` once: it returns a value's
+    * canonical form as UTF-8 bytes, for a struct, array or map the 16 hex
+    * digits of its hash.
+    */
+  def compile(dt: DataType): Any => Array[Byte] = {
+    val w = writerFor(dt)
+    v => {
+      val buf = emptyBuf()
+      put(w, v, buf, esc = false)
+      Arrays.copyOf(buf.arr, buf.len)
+    }
+  }
+
+  /** Canonical string of a Spark internal value of the given type. */
+  def canonicalSpark(value: Any, dt: DataType): String = new String(compile(dt)(value), UTF_8)
+
+  /** Canonical string of a plain string value. */
+  def canonicalString(s: String): String = {
+    val buf = emptyBuf()
+    writeString(s, buf, esc = false)
+    new String(buf.arr, 0, buf.len, UTF_8)
   }
 }
 
@@ -514,7 +452,7 @@ case class CanonicalRowHash(child: Expression) extends UnaryExpression {
   @transient private lazy val canon = CanonicalHash.compile(child.dataType)
 
   /** Called from both interpreted eval and generated code. */
-  def hash(v: Any): UTF8String = UTF8String.fromString(canon(v))
+  def hash(v: Any): UTF8String = UTF8String.fromBytes(canon(v))
 
   override def eval(input: InternalRow): Any = hash(child.eval(input))
 
@@ -546,9 +484,4 @@ object CanonicalRowHash {
   /** Column API: `canonical_hash(struct(cols...))`. */
   def apply(c: Column): Column = ColumnBridge.column(
     CanonicalRowHash(ColumnBridge.expression(c)))
-
-  /** Register as SQL function `get_row_hash` (reference: lotad/connection.py:133). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "get_row_hash", exprs => CanonicalRowHash(exprs.head), "scala_udf")
 }

@@ -271,49 +271,15 @@ final class DriftCompare(
     * set-based — see SURVEY §2 fine print): rows whose per-side
     * MULTIPLICITY differs. A row occurring twice on one side and once on
     * the other is invisible to [[dataDrift]] but reported here with its
-    * per-side counts. One hash-aggregate shuffle; grouping includes the
-    * raw columns so hash collisions cannot merge distinct rows.
-    */
-  def dataDriftBag(table: String): Option[DataFrame] =
-    projected(table).map { case (p1, p2) => bag(p1, p2) }
-
-  private def bag(p1: DataFrame, p2: DataFrame): DataFrame =
-    tagged(p1, p2)
-      .groupBy((p1.columns.map(c => col(s"`$c`")) :+ col("hashed_row")): _*)
-      .agg(
-        count(when(col("observed_in") === side1.id, 1)).as("n_db1"),
-        count(when(col("observed_in") === side2.id, 1)).as("n_db2"))
-      .filter(col("n_db1") =!= col("n_db2"))
-
-  /** Default bag diff: dispatches on the normalized projection's width.
-    * Narrow tables take the one-scan [[dataDriftBag]] (the full-row
-    * shuffle is cheap when rows are a handful of columns); at or above
-    * `wideThreshold` columns the shuffle volume of the full row dwarfs a
-    * second parquet scan and [[dataDriftBagHashed]] wins — the 100 TB
-    * design point for fact tables. Both produce identical rows, so the
-    * choice is purely a physical-plan decision. Each side's input is
-    * resolved once, for the dispatch and the chosen diff alike.
-    */
-  def dataDriftBagAuto(table: String, wideThreshold: Int = 12): Option[DataFrame] =
-    projected(table).map { case (p1, p2) =>
-      if (p1.schema.size >= wideThreshold) bagHashed(p1, p2) else bag(p1, p2)
-    }
-
-  /** Hash-keyed twin of [[dataDriftBag]] for wide tables at scale: the
-    * multiplicity aggregation groups on `hashed_row` ALONE, so the shuffle
-    * carries (16-byte hash, two counts) per distinct row instead of the
-    * full row width — on a 100-column table that is ~two orders of
-    * magnitude less shuffle volume. Row values are attached afterwards by
-    * re-scanning one pass and broadcast-joining the (tiny) differing-hash
-    * set, then collapsing the identical copies per hash.
+    * per-side counts `n_db1` and `n_db2`.
     *
-    * Trade-off vs [[dataDriftBag]]: two scans instead of one, in exchange
-    * for shuffling hashes instead of rows — the right trade whenever row
-    * width x row count dwarfs a rescan (always, at the 100 TB design
-    * point; parquet scans parallelize freely, shuffles do not). Correctness
-    * rests on the canonical hash being collision-free across the table's
-    * distinct rows. The hash is a 64-bit xxh64, so p ≈ n² / 2^65, the same
-    * bound as [[dataDrift]]'s: 2.7 expected colliding pairs at 10^10 rows.
+    * The multiplicity aggregation groups on `hashed_row` ALONE, so the
+    * shuffle carries (16-hex-character hash, two counts) per distinct row
+    * instead of the full row width. Row values are attached afterwards by
+    * joining the union back to the differing-hash set and collapsing the
+    * identical copies per hash. Rows are compared by hash alone, as in
+    * [[dataDrift]], with the same bound: n² / 2^65 expected colliding
+    * pairs over n distinct rows, 2.7 at 10^10 rows.
     *
     * The differing-hash set is joined back WITHOUT a broadcast hint: its
     * size is data-dependent (two heavily-diverged sides approach full
@@ -321,30 +287,24 @@ final class DriftCompare(
     * strategy is left to AQE, which broadcasts exactly when the measured
     * build side is small and falls back to a shuffled hash join otherwise.
     */
-  def dataDriftBagHashed(table: String): Option[DataFrame] =
-    projected(table).map { case (p1, p2) => bagHashed(p1, p2) }
-
-  private def bagHashed(p1: DataFrame, p2: DataFrame): DataFrame = {
-    val cols = p1.columns
-    val u = tagged(p1, p2)
-    val counts = u
-      .groupBy("hashed_row")
-      .agg(
-        count(when(col("observed_in") === side1.id, 1)).as("n_db1"),
-        count(when(col("observed_in") === side2.id, 1)).as("n_db2"))
-      .filter(col("n_db1") =!= col("n_db2"))
-    // attach row values: rescan, keep only differing hashes (AQE picks
-    // broadcast when the differing set is small — the common case — and
-    // degrades to a shuffled join when sides diverge heavily), collapse
-    // the identical copies per hash
-    val rep = u.join(counts, "hashed_row")
-      .groupBy("hashed_row")
-      .agg(first(col(s"`${cols.head}`")).as(cols.head),
-        (cols.tail.map(c => first(col(s"`$c`")).as(c)) ++
-          Seq(first("n_db1").as("n_db1"), first("n_db2").as("n_db2"))): _*)
-    rep.select((cols.map(c => col(s"`$c`")) ++
-      Seq(col("hashed_row"), col("n_db1"), col("n_db2"))): _*)
-  }
+  def dataDriftBag(table: String): Option[DataFrame] =
+    projected(table).map { case (p1, p2) =>
+      val cols = p1.columns
+      val u = tagged(p1, p2)
+      val counts = u
+        .groupBy("hashed_row")
+        .agg(
+          count(when(col("observed_in") === side1.id, 1)).as("n_db1"),
+          count(when(col("observed_in") === side2.id, 1)).as("n_db2"))
+        .filter(col("n_db1") =!= col("n_db2"))
+      val rep = u.join(counts, "hashed_row")
+        .groupBy("hashed_row")
+        .agg(first(col(s"`${cols.head}`")).as(cols.head),
+          (cols.tail.map(c => first(col(s"`$c`")).as(c)) ++
+            Seq(first("n_db1").as("n_db1"), first("n_db2").as("n_db2"))): _*)
+      rep.select((cols.map(c => col(s"`$c`")) ++
+        Seq(col("hashed_row"), col("n_db1"), col("n_db2"))): _*)
+    }
 
   /** Per-table drift counts by side (reference:
     * lotad/queries/duckdb/drift_analysis_extend_data_drift_summary.sql).

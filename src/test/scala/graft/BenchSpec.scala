@@ -43,6 +43,12 @@ class BenchSpec extends SparkSpecBase {
     assert(compact.get("top").asInt == 1)
   }
 
+  test("the median of an even count is the mean of the two middle samples") {
+    assert(math.abs(Bench.median(Seq(0.320, 1.158)) - 0.739) < 1e-12)
+    assert(math.abs(Bench.median(Seq(4.0, 1.0, 3.0, 2.0)) - 2.5) < 1e-12)
+    assert(Bench.median(Seq(3.0, 1.0, 2.0)) == 2.0)
+  }
+
   test("the compact line stays within its cap when hundreds of queries fail") {
     val failing: Seq[(String, (SparkSession, String) => DataFrame)] =
       (1 to 300).map(i => f"q_failing_query_$i%03d" -> ((_: SparkSession, _: String) => sys.error("boom")))

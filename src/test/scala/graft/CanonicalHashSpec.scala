@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{CanonicalHash, CanonicalRowHash, PyFormat}
+import graft.functions.{CanonicalHash, CanonicalRowHash, GraftFunctions, PyFormat}
 import org.apache.spark.sql.functions._
 
 class PyFormatSpec extends org.scalatest.funsuite.AnyFunSuite {
@@ -82,7 +82,7 @@ class CanonicalHashSpec extends SparkSpecBase {
   }
 
   test("SQL registration: get_row_hash") {
-    CanonicalRowHash.register(spark)
+    GraftFunctions.registerAll(spark)
     val r = spark.sql("""SELECT get_row_hash(named_struct('a', 1)) AS h,
                                get_row_hash('{"a": 1}') AS h2""").collect()(0)
     assert(r.getString(0) == r.getString(1))

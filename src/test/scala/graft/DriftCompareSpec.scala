@@ -177,30 +177,35 @@ class DriftCompareSpec extends SparkSpecBase {
       r.getAs[Long]("n_db1") == 2L && r.getAs[Long]("n_db2") == 1L)
   }
 
-  test("dataDriftBagAuto dispatches by width and both paths agree") {
+  test("dataDriftBag groups on the hash alone and matches a multiset count of both sides") {
     import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-    def firstAggWidths(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+    def firstAggWidths(df: DataFrame): Seq[Int] =
       df.queryExecution.optimizedPlan.collect {
         case a: Aggregate => a.groupingExpressions.length
       }
-    // narrow table (5 cols): plain path, grouping = cols + hash
-    val narrow = cmp(base().union(base().filter($"id" === 2)), base())
-    val narrowBag = narrow.dataDriftBagAuto("t").get
-    assert(firstAggWidths(narrowBag).contains(5 + 1))
-    // wide table (15 cols): hashed path — some aggregate groups on the
-    // 16-byte hash ALONE, so the big shuffle never carries row values
-    def widen(df: org.apache.spark.sql.DataFrame) =
+    def widen(df: DataFrame) =
       (1 to 10).foldLeft(df)((d, i) => d.withColumn(s"pad$i", $"id" * i))
-    val wide = new DriftCompare(spark,
-      MemorySide("db1", Map("t" -> widen(base().union(base().filter($"id" === 2))))),
-      MemorySide("db2", Map("t" -> widen(base()))))
-    val wideBag = wide.dataDriftBagAuto("t").get
-    assert(firstAggWidths(wideBag).contains(1))
-    // identical answer on both physical shapes
-    val viaPlain = wide.dataDriftBag("t").get.drop("hashed_row")
-      .orderBy("id").collect().toSeq
-    val viaAuto = wideBag.drop("hashed_row").orderBy("id").collect().toSeq
-    assert(viaAuto == viaPlain)
+    // a narrow (5 cols) and a wide (15 cols) table take the same plan
+    for (shape <- Seq[DataFrame => DataFrame](identity, widen)) {
+      // id 1 only on db2, id 2 twice on db1 and once on db2, id 3 only on db1
+      val db1 = shape(base().filter($"id" =!= 1).union(base().filter($"id" === 2)))
+      val db2 = shape(base().filter($"id" =!= 3))
+      val bag = cmp(db1, db2).dataDriftBag("t").get
+      // some aggregate groups on the hash ALONE, so the big shuffle never
+      // carries row values
+      assert(firstAggWidths(bag).contains(1))
+      // expected: each distinct row whose count differs, with both counts,
+      // the array column as the JSON text the diff carries
+      def rows(df: DataFrame) = df.withColumn("tags", to_json($"tags")).collect().toSeq.map(_.toSeq)
+      val (rows1, rows2) = (rows(db1), rows(db2))
+      val expected = (rows1 ++ rows2).distinct
+        .map(r => r :+ rows1.count(_ == r).toLong :+ rows2.count(_ == r).toLong)
+        .filter(r => r(r.length - 2) != r.last)
+      val got = bag.drop("hashed_row").select((db1.columns :+ "n_db1" :+ "n_db2").map(col): _*)
+        .collect().toSeq.map(_.toSeq)
+      assert(expected.map(_.head).toSet == Set(1L, 2L, 3L))
+      assert(got.toSet == expected.toSet && got.length == expected.length)
+    }
   }
 
   test("compareAll end-to-end with report") {
@@ -253,10 +258,10 @@ class DriftCompareSpec extends SparkSpecBase {
     assert((s1.listings.get, s2.listings.get) == ((1, 1)))
   }
 
-  test("dataDriftBagAuto resolves each side's table once") {
+  test("dataDriftBag resolves each side's table once") {
     val s1 = new CountingSide(MemorySide("db1", Map("t" -> base().union(base().filter($"id" === 2)))))
     val s2 = new CountingSide(MemorySide("db2", Map("t" -> base())))
-    val bag = new DriftCompare(spark, s1, s2).dataDriftBagAuto("t").get
+    val bag = new DriftCompare(spark, s1, s2).dataDriftBag("t").get
     assert((s1.tables.get, s2.tables.get) == ((1, 1)))
     assert(bag.select("id", "n_db1", "n_db2").as[(Long, Long, Long)].collect().toSeq ==
       Seq((2L, 2L, 1L)))
@@ -317,6 +322,35 @@ class DriftCompareSpec extends SparkSpecBase {
     val nullRow = read("nulls").select("id", "n", "observed_in").collect().toSeq
     assert(nullRow.map(_.toSeq) == Seq(Seq(33L, null, "db1")))
     for (t <- Seq("dups", "same")) assert(!java.nio.file.Files.exists(out.resolve(t)), t)
+  }
+
+  test("compareAll -> write -> re-read with names and values beyond the BMP") {
+    // "｡" U+FF61 sorts before "😀" U+1F600 by code point, after it in UTF-16
+    val (a, b) = ("｡", "😀")
+    val db2 = Seq((61L, a, b), (62L, s"x${b}y", "z"), (63L, a, b)).toDF("id", b, a)
+    // row 61 unchanged; 62 differs in one supplementary character; 63 swaps
+    // the values of the two columns
+    val db1 = Seq((61L, a, b), (62L, "x😁y", "z"), (63L, b, a)).toDF("id", b, a)
+    val r = cmp(db1, db2).compareAll(parallelism = 2)
+    val out = java.nio.file.Files.createTempDirectory("driftsmp")
+    try DriftOutput.write(spark, r, out.toString)
+    finally r.dataDrift.values.foreach(_.unpersist())
+    val drift = spark.read.parquet(out.resolve("t").toString)
+    assert(drift.columns.toSeq == Seq("id", a, b, "observed_in", "hashed_row"))
+    assert(graft.functions.PyFormat.cpCompare(a, b) < 0 && a.compareTo(b) > 0)
+    assert(drift.select(col("id"), col(s"`$b`"), col(s"`$a`"), col("observed_in"))
+      .as[(Long, String, String, String)].collect().toSet == Set(
+      (62L, "x😁y", "z", "db1"), (62L, s"x${b}y", "z", "db2"),
+      (63L, b, a, "db1"), (63L, a, b, "db2")))
+  }
+
+  test("one hot hash run of 50k identical rows drifts as one row") {
+    val hot = spark.range(50000).select(lit(71L).as("id"), lit("hot").as("v"))
+    val once = Seq((71L, "hot")).toDF("id", "v")
+    val missing = cmp(hot, once.limit(0)).dataDrift("t").get
+    assert(missing.select("id", "v", "observed_in").as[(Long, String, String)].collect().toSeq ==
+      Seq((71L, "hot", "db1")))
+    assert(cmp(hot, once).dataDrift("t").get.count() == 0)
   }
 
   test("summarize counts each side in one job, as groupBy(observed_in).count() does") {

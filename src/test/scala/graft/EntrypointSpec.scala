@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the set of programs under src/main. Profiling goes through Bench,
   * ExplainQ and the perfbench harness, all under GraftSession's config; a
   * new `def main` would be a one-off driver with its own session and knobs.
-  * Also pins the registry's one table-read path, `Tables`.
+  * Also pins the registry's one table-read path, `Tables`, and the
+  * canonical hash's one byte writer.
   */
 class EntrypointSpec extends AnyFunSuite {
   private val owner =
@@ -40,5 +41,11 @@ class EntrypointSpec extends AnyFunSuite {
     val direct = sources("src/main/scala/graft/registry")
       .filter(f => new String(Files.readAllBytes(f), UTF_8).contains("read.parquet"))
     assert(direct.isEmpty, s"read.parquet in ${direct.mkString(", ")}; use Tables.t")
+  }
+
+  test("the canonical hash has one writer, over bytes: no StringBuilder in CanonicalHash.scala") {
+    val path = Paths.get("src/main/scala/graft/functions/CanonicalHash.scala")
+    val src = new String(Files.readAllBytes(path), UTF_8)
+    assert(!src.contains("StringBuilder"), "CanonicalHash renders each type once, into its byte buffer")
   }
 }
