@@ -177,7 +177,11 @@ class DriftCompareSpec extends SparkSpecBase {
       r.getAs[Long]("n_db1") == 2L && r.getAs[Long]("n_db2") == 1L)
   }
 
-  test("dataDriftBag groups on the hash alone and matches a multiset count of both sides") {
+  // The name dates from when dataDriftBagAuto chose a plan by table width.
+  // dataDriftBag now takes the hash-keyed plan at every width; this checks
+  // that plan on a narrow and a wide table, and that both agree with a
+  // multiset count of both sides made on the driver.
+  test("dataDriftBagAuto dispatches by width and both paths agree") {
     import org.apache.spark.sql.catalyst.plans.logical.Aggregate
     def firstAggWidths(df: DataFrame): Seq[Int] =
       df.queryExecution.optimizedPlan.collect {
