@@ -40,7 +40,8 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
   * CPU-dense operators whose work is quadratic in group size while
   * their shuffled BYTES are tiny (edit-distance verify, LSH verify,
   * percentile/window stages) opt out of byte-based coalescing locally
-  * with explicit-width repartitions — see FuzzyJoin/Dedup/Stats.
+  * with explicit-width repartitions — see
+  * [[graft.operators.PrefixSum.workPartition]].
   *
   * The builder injects one AQE query-stage preparation rule,
   * [[SmallRangeSort]]: a global sort whose input is an already-shuffled

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import PrefixSum.workPartition
+
 /** Blocked edit-distance matching: the entity-resolution primitive for
   * dirty catalogs (typo'd names, OCR noise). Semantics are explicitly
   * *blocked* — only pairs sharing a caller-chosen blocking key are
@@ -30,14 +32,8 @@ object FuzzyJoin {
       col(leftKey).as("l_key")).withColumn("blk", blockOf(col("l_key")))
     val r = right.select(col(rightId).cast("long").as("r_id"),
       col(rightKey).as("r_key")).withColumn("blk", blockOf(col("r_key")))
-    // explicit-width repartition on the block key (r18): the verify
-    // kernel's work is quadratic in block size while the join INPUT is
-    // a few bytes per row, so AQE's byte-based coalescing would run the
-    // whole verify on one task. A user-specified partition count is
-    // exempt from coalescing; both sides share the distribution, so the
-    // join adds no further exchange.
-    val n = left.sparkSession.sessionState.conf.numShufflePartitions
-    l.repartition(n, col("blk")).join(r.repartition(n, col("blk")), Seq("blk"))
+    // the verify kernel's work is quadratic in block size
+    workPartition(l, col("blk")).join(workPartition(r, col("blk")), Seq("blk"))
       .filter(abs(length(col("l_key")) - length(col("r_key"))) <= maxEdits)
       // threshold form returns -1 once the running distance exceeds it
       .withColumn("dist", levenshtein(col("l_key"), col("r_key"), maxEdits))
@@ -112,19 +108,12 @@ object FuzzyJoin {
     // driver — a cost that grows with the data while the shuffle stays
     // partition-parallel. At cluster scale these sides exceed any
     // broadcast threshold anyway; the hint makes local behavior match.
-    // explicit-width repartition on the segment keys (r18): the banded
-    // DP verify runs inside the join condition, so the work per
-    // candidate pair is invisible to AQE's byte-based coalescing — left
-    // to it, the whole verify serializes onto one or two tasks (the
-    // segment keys are a few bytes per row). A user-specified partition
-    // count is exempt from coalescing, and both sides sharing the
-    // distribution keeps the join exchange-free on top of it.
-    val np = left.sparkSession.sessionState.conf.numShufflePartitions
-    val lk = lKeys.hint("shuffle_hash")
+    // the banded DP verify runs inside the join condition, so its work
+    // per candidate pair is invisible to byte-based coalescing
+    val lk = workPartition(lKeys.hint("shuffle_hash")
       .withColumnRenamed("n", "ln").withColumnRenamed("i", "li")
-      .withColumnRenamed("seg", "lseg")
-      .repartition(np, col("ln"), col("li"), col("lseg"))
-    val rk = rKeys.repartition(np, col("n"), col("i"), col("seg"))
+      .withColumnRenamed("seg", "lseg"), col("ln"), col("li"), col("lseg"))
+    val rk = workPartition(rKeys, col("n"), col("i"), col("seg"))
     val mainMatch = lk.join(rk,
       col("ln") === col("n") && col("li") === col("i") && col("lseg") === col("seg") &&
         abs(length(col("l_key")) - length(col("r_key"))) <= e &&
@@ -185,11 +174,8 @@ object FuzzyJoin {
       col(leftKey).as("l_key")).withColumn("blk", blockOf(col("l_key")))
     val r = right.select(col(rightId).cast("long").as("r_id"),
       col(rightKey).as("r_key")).withColumn("blk", blockOf(col("r_key")))
-    // explicit-width repartition on the block key — see [[fuzzyJoin]]:
-    // the Damerau DP is O(len²) per candidate pair, work the byte-based
-    // coalescing heuristic cannot see
-    val n = left.sparkSession.sessionState.conf.numShufflePartitions
-    l.repartition(n, col("blk")).join(r.repartition(n, col("blk")), Seq("blk"))
+    // the Damerau DP is O(len²) per candidate pair
+    workPartition(l, col("blk")).join(workPartition(r, col("blk")), Seq("blk"))
       .filter(abs(length(col("l_key")) - length(col("r_key"))) <= maxEdits)
       .withColumn("dist",
         graft.functions.DamerauLevenshtein(col("l_key"), col("r_key")))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import PrefixSum.workPartition
+
 /** Iterative graph analytics on edge-list DataFrames. Complements the
   * connected-components operator in [[Dedup]] with a weighted-influence
   * ranking; both follow the same loop discipline — each iteration is one
@@ -349,15 +351,9 @@ object Graph {
     // this the distinct + degree-join subplan executes twice. O(|kept|)
     // rows, one eager job.
     val kept = e.join(deg, Seq("f")).localCheckpoint(eager = true)
-    // explicit-width repartition on the feature key (r18): the pair
-    // expansion is quadratic in feature degree while the join INPUT is
-    // a few bytes per row, so AQE's byte-based coalescing would run the
-    // whole expansion on one task (probe-measured: a 7.6 s single-task
-    // stage). A user-specified count is exempt from coalescing; both
-    // sides share the distribution, so the join adds no exchange.
-    val np = incidence.sparkSession.sessionState.conf.numShufflePartitions
-    val pairs = kept.repartition(np, col("f")).as("a")
-      .join(kept.select("f", "ent").repartition(np, col("f")).as("b"),
+    // the pair expansion is quadratic in feature degree
+    val pairs = workPartition(kept, col("f")).as("a")
+      .join(workPartition(kept.select("f", "ent"), col("f")).as("b"),
         col("a.f") === col("b.f") && col("a.ent") < col("b.ent"))
       .select(col("a.ent").as("s1"), col("b.ent").as("s2"),
         col("a.deg").as("deg"))

@@ -28,7 +28,7 @@ object Materialize {
     * starts at the plan's leaves. An eager checkpoint's lineage ends at
     * its `LocalCheckpointRDD`, so the walk never reaches the caches the
     * checkpointed plan read; on a frame derived from a checkpoint's RDD
-    * (`createDataFrame(ckpt.rdd.mapPartitions(…))`) it walks down to the
+    * (the rows of [[PrefixSum.running]]) it walks down to the
     * checkpoint. A no-op on frames without `LogicalRDD` leaves.
     */
   def release(df: DataFrame): Unit = {

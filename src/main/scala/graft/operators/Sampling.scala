@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic, content-addressed sampling for training-data pipelines.
@@ -115,15 +115,13 @@ object Sampling {
     * `budget`. The "curate the top-quality N-token training subset"
     * operation; selection is exact and deterministic, not sampled.
     *
-    * Scale shape — a distributed prefix sum, NOT a global window (a
-    * bare `Window.orderBy` single-partitions the corpus): the rows are
-    * range-partitioned ONCE on the rank order (pinned — see
-    * [[budgetSelect]]), per-partition totals (one row each) come to the
-    * driver, and the kept rows emerge from one narrow per-partition
-    * fold seeded with the exclusive partition offsets. Driver state =
-    * one long per partition. Integer token counts make the running
-    * totals exact, so an engine replaying the same total order
-    * reproduces the selection.
+    * Scale shape: the [[PrefixSum.running]] distributed prefix sum on
+    * the rank order, NOT a global window (a bare `Window.orderBy`
+    * single-partitions the corpus); driver state is one long per
+    * partition. Integer token counts make the running totals exact, so
+    * an engine replaying the same total order reproduces the selection.
+    * A null token count adds 0. Call [[Materialize.release]] on the
+    * result after the last action to drop the pinned layout.
     */
   def tokenBudgetSelect(df: DataFrame, idCol: String, scoreCol: String,
                         tokensCol: String, budget: Long,
@@ -137,16 +135,12 @@ object Sampling {
     * best quality first") that follows [[temperatureWeights]] when the
     * budget is expressed in tokens rather than rows.
     *
-    * Scale shape — the [[tokenBudgetSelect]] distributed prefix sum
-    * generalized to composite keys, NOT a `Window.partitionBy(domain)`
-    * (which would sort an entire domain in ONE task — a 20 TB web crawl
-    * domain kills that plan): rows range-partition on
-    * (domain, score desc, id), so a domain occupies a contiguous run of
-    * partitions; per-(domain, partition) totals — bounded by
-    * nDomains × nPartitions rows — come to the driver and fold into
-    * per-domain exclusive offsets; the kept rows emerge from one
-    * narrow per-partition fold over the SAME materialized layout.
-    * Integer token counts keep the running totals exact and replayable.
+    * Scale shape: [[PrefixSum.running]] reset at each domain, NOT a
+    * `Window.partitionBy(domain)` (which would sort an entire domain in
+    * ONE task — a 20 TB web crawl domain kills that plan). A domain
+    * occupies a contiguous run of partitions, and driver state is one
+    * long per (domain, partition). Integer token counts keep the running
+    * totals exact and replayable. Release as [[tokenBudgetSelect]].
     */
   def domainBudgetSelect(df: DataFrame, domainCol: String, idCol: String,
                          scoreCol: String, tokensCol: String, budget: Long,
@@ -154,86 +148,18 @@ object Sampling {
     budgetSelect(df, Some(domainCol), idCol, scoreCol, tokensCol, budget,
       nPartitions)
 
-  /** Shared distributed-prefix-sum core of [[tokenBudgetSelect]] /
-    * [[domainBudgetSelect]].
-    *
-    * Determinism is load-bearing here: RangePartitioner seeds its
-    * boundary sampling from the RDD id, so if the range exchange were
-    * re-executed per pass, pass 2 could draw DIFFERENT boundaries than
-    * the ones pass 1's offsets were computed for — rows near a boundary
-    * would then add the wrong offset (a live sf0.1 bug: q_domain_budget
-    * drifted 140 -> 133 rows between runs). The partitioned layout is
-    * therefore `localCheckpoint`ed ONCE and both passes read the pinned
-    * RDD. Pass 2 is deliberately NOT a Window: the checkpoint erases
-    * the range partitioning from the plan's metadata, so a
-    * `Window.partitionBy(_pid)` would re-shuffle the corpus by _pid;
-    * instead a narrow `sortWithinPartitions` + per-partition fold
-    * (classic prefix-sum stitch, the one genuinely imperative
-    * per-partition step) computes the running totals with ZERO
-    * exchanges beyond the single range exchange inside the checkpoint.
+  /** The rows of [[tokenBudgetSelect]] / [[domainBudgetSelect]]: those
+    * whose running total `cum_tokens` is within `budget`.
     */
   private def budgetSelect(df: DataFrame, domainColOpt: Option[String],
                            idCol: String, scoreCol: String,
                            tokensCol: String, budget: Long,
                            nPartitions: Int): DataFrame = {
     require(budget > 0, "budget must be positive")
-    val spark = df.sparkSession
-    val n = if (nPartitions > 0) nPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val rangeKeys = domainColOpt.map(d => col(d).asc).toSeq ++
-      Seq(col(scoreCol).desc, col(idCol).asc)
-    val parted = df
-      .withColumn("_tok", col(tokensCol).cast("long"))
-      .repartitionByRange(n, rangeKeys: _*)
-      .withColumn("_pid", spark_partition_id())
-      .localCheckpoint(true)
-    // pass 1: per-(domain?, partition) totals -> exclusive prefix
-    // offsets in partition order (partition ids follow the rank order
-    // BY CONSTRUCTION of the range exchange); driver state is one long
-    // per (domain, partition) pair
-    val domKey: Row => Any = domainColOpt match {
-      case Some(d) => r => r.get(r.fieldIndex(d))
-      case None    => _ => null
-    }
-    val totals = parted.groupBy(
-        (domainColOpt.map(col).toSeq :+ col("_pid")): _*)
-      .agg(sum(col("_tok")).as("_t"))
-      .collect()
-      .map(r => (domKey(r), r.getAs[Int]("_pid"), r.getAs[Long]("_t")))
-    val offsets: Map[(Any, Int), Long] = totals.groupBy(_._1).toSeq.flatMap {
-      case (dom, rows) =>
-        val ordered = rows.sortBy(_._2)
-        ordered.zip(ordered.scanLeft(0L)(_ + _._3).init).map {
-          case ((_, pid, _), off) => (dom, pid) -> off
-        }
-    }.toMap
-    // pass 2: narrow in-partition sort + one fold per partition over the
-    // pinned layout; the running sum resets at each domain boundary
-    // (domains are contiguous within a partition by the range keys)
-    val sorted = parted.sortWithinPartitions(rangeKeys: _*)
-    val schema = sorted.schema.add("cum_tokens",
-      org.apache.spark.sql.types.LongType, nullable = false)
-    val domIdx = domainColOpt.map(d => sorted.schema.fieldIndex(d))
-    val tokIdx = sorted.schema.fieldIndex("_tok")
-    val pidIdx = sorted.schema.fieldIndex("_pid")
-    val offB = spark.sparkContext.broadcast(offsets)
-    val kept = sorted.rdd.mapPartitions { it =>
-      var seeded = false
-      var curDom: Any = null
-      var running = 0L
-      it.flatMap { row =>
-        val dom = domIdx.map(row.get).orNull
-        if (!seeded || (domIdx.isDefined && dom != curDom)) {
-          seeded = true
-          curDom = dom
-          running = offB.value.getOrElse((dom, row.getInt(pidIdx)), 0L)
-        }
-        running += (if (row.isNullAt(tokIdx)) 0L else row.getLong(tokIdx))
-        if (running <= budget) Some(Row.fromSeq(row.toSeq :+ running))
-        else None
-      }
-    }
-    spark.createDataFrame(kept, schema).drop("_pid", "_tok")
+    PrefixSum.running(df.withColumn("_tok", col(tokensCol).cast("long")),
+        Seq(col(scoreCol).desc, col(idCol).asc), Seq("_tok" -> "cum_tokens"),
+        domainColOpt, nPartitions)
+      .rows.filter(col("cum_tokens") <= budget).drop("_tok")
   }
 
   /** Concat-and-chunk sequence packing: documents concatenate in
@@ -248,68 +174,30 @@ object Sampling {
     * no-split variant that opens a fresh sequence instead. Zero-token
     * documents drop — they occupy no window.
     *
-    * Scale shape: the [[tokenBudgetSelect]] distributed prefix sum —
-    * one pinned range exchange on the id order
-    * (`localCheckpoint`, see [[budgetSelect]]'s determinism note),
-    * per-partition totals to the driver (one long each), then a narrow
-    * per-partition fold emits each row's exclusive running total. No
-    * global window, no single-task sort. Integer token counts keep
-    * every placement exact, so an engine replaying the same order
-    * reproduces the packing bit-for-bit. Call [[Materialize.release]] on
-    * the result after the last action to drop the pinned layout.
+    * Scale shape: the [[PrefixSum.running]] distributed prefix sum on
+    * the id order, then column expressions over each row's exclusive
+    * running total. No global window, no single-task sort. Integer
+    * token counts keep every placement exact, so an engine replaying the
+    * same order reproduces the packing bit-for-bit. Call
+    * [[Materialize.release]] on the result after the last action to drop
+    * the pinned layout.
     */
   def packWindows(df: DataFrame, idCol: String, tokensCol: String,
                   capacity: Long, nPartitions: Int = 0): DataFrame = {
     require(capacity > 0, "capacity must be positive")
-    val spark = df.sparkSession
-    val n = if (nPartitions > 0) nPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val parted = df
-      .select(col(idCol), col(tokensCol).cast("long").as("_tok"))
-      .filter(col("_tok").isNotNull && col("_tok") > 0L)
-      .repartitionByRange(n, col(idCol).asc)
-      .withColumn("_pid", spark_partition_id())
-      .localCheckpoint(true)
-    val totals = parted.groupBy("_pid").agg(sum("_tok").as("_t"))
-      .collect().map(r => (r.getAs[Int]("_pid"), r.getAs[Long]("_t")))
-      .sortBy(_._1)
-    val offsets: Map[Int, Long] = totals.map(_._1)
-      .zip(totals.scanLeft(0L)(_ + _._2).init).toMap
-    val sorted = parted.sortWithinPartitions(col(idCol).asc)
-    val idIdx = sorted.schema.fieldIndex(idCol)
-    val tokIdx = sorted.schema.fieldIndex("_tok")
-    val pidIdx = sorted.schema.fieldIndex("_pid")
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      sorted.schema(idIdx),
-      org.apache.spark.sql.types.StructField("n_tokens",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("bin",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("offset",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("bin_last",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("crosses_boundary",
-        org.apache.spark.sql.types.BooleanType, nullable = false)))
-    val offB = spark.sparkContext.broadcast(offsets)
-    val packed = sorted.rdd.mapPartitions { it =>
-      var seeded = false
-      var running = 0L
-      it.map { row =>
-        if (!seeded) {
-          seeded = true
-          running = offB.value.getOrElse(row.getInt(pidIdx), 0L)
-        }
-        val tok = row.getLong(tokIdx)
-        val before = running
-        running += tok
-        val bin = before / capacity
-        val binLast = (before + tok - 1) / capacity
-        Row(row.get(idIdx), tok, bin, before % capacity, binLast,
-          bin != binLast)
-      }
-    }
-    spark.createDataFrame(packed, outSchema)
+    val docs = df.select(col(idCol), col(tokensCol).cast("long").as("n_tokens"))
+      .filter(col("n_tokens") > 0L)
+    // a doc's first token sits at `_end - n_tokens`. `div`, not `/`:
+    // Spark's Divide returns DOUBLE. `div` and `%` are typed nullable for
+    // a zero divisor; capacity > 0, so `coalesce` only keeps them non-null
+    def placed(e: String): Column = coalesce(expr(e), lit(0L))
+    PrefixSum.running(docs, Seq(col(idCol).asc), Seq("n_tokens" -> "_end"),
+        nPartitions = nPartitions)
+      .rows.select(col(idCol), col("n_tokens"),
+        placed(s"(_end - n_tokens) div ${capacity}L").as("bin"),
+        placed(s"(_end - n_tokens) % ${capacity}L").as("offset"),
+        placed(s"(_end - 1) div ${capacity}L").as("bin_last"))
+      .withColumn("crosses_boundary", col("bin") =!= col("bin_last"))
   }
 
   /** Temperature-based source mixing (the multi-corpus reweighting used

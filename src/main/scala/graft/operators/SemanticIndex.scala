@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import PrefixSum.workPartition
+
 /** Persisted hyperplane-LSH index over an embedding corpus — the vector
   * flavor of the text pipeline's saved MinHash index
   * ([[Dedup.buildLshIndex]] / [[Dedup.appendLshIndex]] /
@@ -153,13 +155,9 @@ object SemanticIndex {
     // frame is one cached pass; the written bytes are identical.
     val keyed = keyRows(df, idCol, vecCol, m).localCheckpoint(eager = true)
     // repartition on the partition columns: each (t, bucket) directory is
-    // written by exactly one task — no small-file explosion. The count is
-    // pinned to the session's shuffle parallelism (r18): this stage's cost
-    // is FILE CREATION (up to nTables·2^nBits directories), not bytes, so
-    // AQE's byte-based coalescing must not serialize it onto one task
-    // (probe-measured 9.7 s single-task write vs parallel at 32).
-    keyed.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
-        col("t"), col("bucket"))
+    // written by exactly one task — no small-file explosion. This stage's
+    // cost is FILE CREATION (up to nTables·2^nBits directories), not bytes
+    workPartition(keyed, col("t"), col("bucket"))
       .write.mode("overwrite").partitionBy("t", "bucket")
       .parquet(s"$path/keys")
     val spark = df.sparkSession
@@ -227,8 +225,7 @@ object SemanticIndex {
     val existing = prunedKeys(spark, path, touched, pruneCap)
       .getOrElse(spark.read.parquet(s"$path/keys"))
       .select(col("id")).distinct()
-    keyed.join(existing, Seq("id"), "left_anti")
-      .repartition(spark.sessionState.conf.numShufflePartitions,
+    workPartition(keyed.join(existing, Seq("id"), "left_anti"),
         col("t"), col("bucket"))
       .write.mode("append").partitionBy("t", "bucket")
       .parquet(s"$path/keys")
@@ -365,9 +362,7 @@ object SemanticIndex {
     val tmp = new org.apache.hadoop.fs.Path(s"$path/_keys_compacting")
     val bak = new org.apache.hadoop.fs.Path(s"$path/_keys_backup")
     val fs = src.getFileSystem(conf)
-    keyRows(vecs, "id", "v", m)
-      .repartition(spark.sessionState.conf.numShufflePartitions,
-        col("t"), col("bucket"))
+    workPartition(keyRows(vecs, "id", "v", m), col("t"), col("bucket"))
       .write.mode("overwrite").partitionBy("t", "bucket")
       .parquet(tmp.toString)
     if (fs.exists(bak)) fs.delete(bak, true) // stale crash leftovers

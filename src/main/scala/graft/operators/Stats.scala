@@ -812,10 +812,9 @@ object Stats {
     * with its 1000-group require. Medians use the repo's inverted-CDF
     * convention (smallest value whose cumulative count reaches half) —
     * always an observed value, no cross-engine midpoint-average float
-    * hazard — computed DISTRIBUTED: the slope set range-partitions by
-    * value, per-partition counts come to the driver (one long per
-    * partition), and only the single partition containing the median is
-    * scanned; no global single-task window anywhere in the plan.
+    * hazard — computed DISTRIBUTED: a [[PrefixSum.running]] count over
+    * the distinct values, then the smallest value whose running count
+    * reaches half; no global single-task window anywhere in the plan.
     *
     * Exactness: values canonicalize to exact integer units; each slope
     * is ONE double division of exact integers rounded at 6 dp; the
@@ -846,47 +845,15 @@ object Stats {
     val slopes = a.join(b, col("_t2") > col("_t1"))
       .select(round(((col("_u2") - col("_u1")).cast("double") / unitsPerValue)
         / (col("_t2") - col("_t1")), 6).as("_s"))
-    // Distributed inverted-CDF median: range-partition the distinct-value
-    // counts, bring ONE long per partition to the driver, locate the
-    // partition holding the half-mass boundary, and scan only it. The
-    // layout is localCheckpoint-pinned so the offset pass and the probe
-    // pass read the SAME range boundaries (RangePartitioner re-samples
-    // per execution otherwise — the q_domain_budget lesson).
+    // inverted-CDF median: the smallest distinct value whose running
+    // count reaches half the total
     def invCdfMedian(vals: DataFrame, c: String): Double = {
-      val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val parted = vals.groupBy(col(c)).agg(count(lit(1)).as("_n"))
-        .repartitionByRange(nPart, col(c))
-        .withColumn("_pid", spark_partition_id())
-        .localCheckpoint(true)
-      try {
-        val totals = parted.groupBy("_pid").agg(sum("_n").as("_t")).collect()
-          .map(r => (r.getAs[Int]("_pid"), r.getAs[Long]("_t")))
-          .sortBy(_._1)
-        val tot = totals.map(_._2).sum
-        val offsets = totals.map(_._1)
-          .zip(totals.scanLeft(0L)(_ + _._2).init).toMap
-        // first partition whose cumulative mass reaches half: pids are
-        // value-ordered BY CONSTRUCTION of the range exchange
-        val pStar = totals.find { case (pid, t) =>
-          2L * (offsets(pid) + t) >= tot }.get._1
-        val base = offsets(pStar)
-        // narrow probe: sort WITHIN the one partition holding the
-        // boundary, fold a running count until half-mass — no window,
-        // no exchange, one task over ~1/nPart of the distinct values
-        parted.filter(col("_pid") === pStar)
-          .sortWithinPartitions(col(c))
-          .select(col(c).cast("double"), col("_n"))
-          .rdd.mapPartitions { it =>
-            var cum = base
-            var res: Option[Double] = None
-            while (it.hasNext && res.isEmpty) {
-              val r = it.next()
-              cum += r.getLong(1)
-              if (2L * cum >= tot) res = Some(r.getDouble(0))
-            }
-            res.iterator
-          }.collect().head
-      } finally Materialize.release(parted) // drop the checkpoint blocks
+      val scan = PrefixSum.running(vals.groupBy(col(c)).agg(count(lit(1)).as("_n")),
+        Seq(col(c).asc), Seq("_n" -> "_cum"))
+      // a top-1, not `agg(min)`: it collects in one job, with no exchange
+      try scan.rows.filter(col("_cum") * 2L >= scan.totals.getLong(0))
+        .orderBy(col(c)).select(col(c).cast("double")).head().getDouble(0)
+      finally Materialize.release(scan.rows)
     }
     val slope = invCdfMedian(slopes.withColumnRenamed("_s", "slope"), "slope")
     val resid = series
@@ -3159,19 +3126,14 @@ object Stats {
     * defined on non-negative quantities); checkpoints whose target
     * rank ⌊k·n/points⌋ is 0 (n < points/k) are absent from the output.
     *
-    * Scale shape — the [[Sampling]] range-exchange prefix sum, NOT a
-    * bare `Window.orderBy` (which funnels the whole table through ONE
-    * task): the distinct-value table of a CONTINUOUS metric is
-    * corpus-sized — nearly one row per order for a price column — so
-    * "distinct values are bounded" is not a real bound here. The table
-    * is range-partitioned on the value (layout pinned by a
-    * localCheckpoint so both passes read the same boundaries), pass 1
-    * collects one (count, mass) pair per partition for exclusive
-    * prefix offsets, pass 2 folds running totals inside each partition
-    * with zero further exchanges. Driver state: one row per PARTITION.
-    * The pinned layout stays cached while the result is consumed —
-    * call [[Materialize.release]] on the result afterwards (the
-    * budget-select/packWindows contract).
+    * Scale shape — the [[PrefixSum.running]] distributed prefix sum of
+    * (count, mass) over the value order, NOT a bare `Window.orderBy`
+    * (which funnels the whole table through ONE task): the
+    * distinct-value table of a CONTINUOUS metric is corpus-sized —
+    * nearly one row per order for a price column — so "distinct values
+    * are bounded" is not a real bound here. Driver state: one row per
+    * partition. Call [[Materialize.release]] on the result after the
+    * last action to drop the pinned layout.
     */
   def lorenzCurve(df: DataFrame, valueCol: String, points: Int = 10,
                   precision: Int = 18, scale: Int = 2): DataFrame = {
@@ -3180,60 +3142,14 @@ object Stats {
     val v = col(valueCol).cast(s"decimal($precision,$scale)")
     val cells = df.filter(v.isNotNull && v >= 0)
       .groupBy(v.as("_v")).agg(count(lit(1)).as("_c"))
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val parted = cells.repartitionByRange(nPart, col("_v").asc)
-      .withColumn("_pid", spark_partition_id())
-      .localCheckpoint(true)
-    val mass = (col("_v") * col("_c")).cast("decimal(38,6)")
-    // pass 1: per-partition (count, mass) totals — partition ids follow
-    // the value order BY CONSTRUCTION of the range exchange, so their
-    // running sums are the exclusive prefix offsets
-    val ptotals = parted.groupBy("_pid")
-      .agg(sum(col("_c")).as("_pc"), sum(mass).as("_pm"))
-      .collect()
-      .map(r => (r.getAs[Int]("_pid"), r.getAs[Long]("_pc"),
-        r.getAs[java.math.BigDecimal]("_pm")))
-      .sortBy(_._1)
-    val totalN = ptotals.map(_._2).sum
-    val totalM = ptotals.foldLeft(java.math.BigDecimal.ZERO)(_ add _._3)
-    val cOff: Map[Int, Long] = ptotals.map(_._1)
-      .zip(ptotals.scanLeft(0L)(_ + _._2).init).toMap
-    val mOff: Map[Int, java.math.BigDecimal] = ptotals.map(_._1)
-      .zip(ptotals.scanLeft(java.math.BigDecimal.ZERO)(_ add _._3).init).toMap
-    // pass 2: narrow in-partition sort + one running fold per partition
-    // over the pinned layout (exact decimal adds, order-independent
-    // only in the sense that the fold order IS the value order)
-    val sorted = parted.sortWithinPartitions(col("_v").asc)
-    val vIdx = sorted.schema.fieldIndex("_v")
-    val cIdx = sorted.schema.fieldIndex("_c")
-    val pidIdx = sorted.schema.fieldIndex("_pid")
-    val outSchema = sorted.schema
-      .add("_cum", LongType, nullable = false)
-      .add("_cumv", org.apache.spark.sql.types.DecimalType(38, 6), nullable = false)
-    val cOffB = spark.sparkContext.broadcast(cOff)
-    val mOffB = spark.sparkContext.broadcast(mOff)
-    val cumRdd = sorted.rdd.mapPartitions { it =>
-      var seeded = false
-      var runC = 0L
-      var runM = java.math.BigDecimal.ZERO
-      it.map { row =>
-        if (!seeded) {
-          seeded = true
-          val pid = row.getInt(pidIdx)
-          runC = cOffB.value.getOrElse(pid, 0L)
-          runM = mOffB.value.getOrElse(pid, java.math.BigDecimal.ZERO)
-        }
-        val c = row.getLong(cIdx)
-        runC += c
-        runM = runM.add(row.getDecimal(vIdx)
-          .multiply(java.math.BigDecimal.valueOf(c))).setScale(6)
-        Row.fromSeq(row.toSeq :+ runC :+ runM)
-      }
-    }
-    val w = spark.createDataFrame(cumRdd, outSchema)
+      .withColumn("_m", (col("_v") * col("_c")).cast("decimal(38,6)"))
+    val scan = PrefixSum.running(cells, Seq(col("_v").asc),
+      Seq("_c" -> "_cum", "_m" -> "_cumv"))
+    val totalN = scan.totals.getLong(0)
+    val totalM = scan.totals.getDecimal(1)
     val probes = broadcast(spark.range(1, points + 1)
       .select(col("id").as("point")))
-    w.crossJoin(probes)
+    scan.rows.crossJoin(probes)
       // `div`, not `/`: Spark's Divide always returns DOUBLE; the rank
       // must stay an exact integer
       .withColumn("_r", expr(s"(point * ${totalN}L) div ${points}L"))

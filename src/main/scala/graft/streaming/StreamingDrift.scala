@@ -40,18 +40,6 @@ object StreamingDrift {
     def unpersist(): Unit = { referenceHashes.unpersist(); () }
   }
 
-  /** `stream` and `reference` must share the (already normalized)
-    * column set — the caller aligns projections the same way
-    * [[graft.operators.DriftCompare]] does for batch sides. Convenience
-    * form of [[monitor]] for one-shot monitors that live as long as the
-    * session.
-    */
-  @deprecated("apply discards the Monitor handle, so the persisted " +
-    "reference hash set can never be released per-monitor; use monitor() " +
-    "and call unpersist() when stopping", "round-10")
-  def apply(stream: DataFrame, reference: DataFrame): DataFrame =
-    monitor(stream, reference).drift
-
   /** Streaming PSI: the Population Stability Index of each event-time
     * window against a STATIC reference — continuous distribution-drift
     * monitoring (the streaming twin of [[graft.operators.Stats.psi]];
@@ -253,6 +241,11 @@ object StreamingDrift {
         (col("chi2") > chi2Critical).as("srm_flag"))
   }
 
+  /** Start a drift monitor of `stream` against `reference`. The two must
+    * share the (already normalized) column set — the caller aligns
+    * projections the same way [[graft.operators.DriftCompare]] does for
+    * batch sides.
+    */
   def monitor(stream: DataFrame, reference: DataFrame): Monitor = {
     require(stream.columns.toSet == reference.columns.toSet,
       s"aligned projections required; stream-only: " +

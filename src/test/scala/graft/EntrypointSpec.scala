@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the set of programs under src/main. Profiling goes through Bench,
   * ExplainQ and the perfbench harness, all under GraftSession's config; a
   * new `def main` would be a one-off driver with its own session and knobs.
-  * Also pins the registry's one table-read path, `Tables`, and the
-  * canonical hash's one byte writer.
+  * Also pins the registry's one table-read path, `Tables`, the canonical
+  * hash's one byte writer, and the one home of explicit partition widths.
   */
 class EntrypointSpec extends AnyFunSuite {
   private val owner =
@@ -41,6 +41,22 @@ class EntrypointSpec extends AnyFunSuite {
     val direct = sources("src/main/scala/graft/registry")
       .filter(f => new String(Files.readAllBytes(f), UTF_8).contains("read.parquet"))
     assert(direct.isEmpty, s"read.parquet in ${direct.mkString(", ")}; use Tables.t")
+  }
+
+  test("partition widths are read only in PrefixSum and GraftSession") {
+    val prefixSum = "src/main/scala/graft/operators/PrefixSum.scala"
+    val session = "src/main/scala/graft/GraftSession.scala"
+    val allowed = Map(
+      "spark_partition_id" -> Set(prefixSum),
+      "numShufflePartitions" -> Set(prefixSum, session),
+      "\"spark.sql.shuffle.partitions\"" -> Set(prefixSum, session))
+    val offenders = for {
+      f <- sources("src/main/scala")
+      src = new String(Files.readAllBytes(f), UTF_8)
+      (token, owners) <- allowed
+      if src.contains(token) && !owners.contains(f.toString)
+    } yield s"$token in $f"
+    assert(offenders.isEmpty, s"${offenders.mkString(", ")}; use PrefixSum.width, workPartition or running")
   }
 
   test("the canonical hash has one writer, over bytes: no StringBuilder in CanonicalHash.scala") {

@@ -41,22 +41,25 @@ class ParquetSchemaSpec extends SparkSpecBase {
 
   private def withNanosAsLong[T](on: Boolean)(body: => T): T = withConf(nanosKey, on.toString)(body)
 
-  /** One-column-plus-key file whose `ts` is TIMESTAMP(NANOS), which Spark
-    * reads only as a Long under `nanosAsLong` and cannot write itself.
+  /** Writes (event_id, ts) rows to a file whose `ts` is TIMESTAMP(NANOS),
+    * which Spark reads only as a Long under `nanosAsLong` and cannot write
+    * itself.
     */
-  private lazy val nanosFile: String = {
-    val path = s"${tmp("nanos")}/events.parquet"
+  private def writeNanos(path: String, rows: Seq[(Long, Long)]): String = {
     val schema = MessageTypeParser.parseMessageType(
       "message events { required int64 event_id; optional int64 ts (TIMESTAMP(NANOS,false)); }")
     val conf = new Configuration()
     val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(new Path(path), conf))
       .withConf(conf).withType(schema).build()
     val groups = new SimpleGroupFactory(schema)
-    try (1L to 3L).foreach(i => writer.write(groups.newGroup()
-      .append("event_id", i).append("ts", i * 1000000000L)))
-    finally writer.close()
+    try rows.foreach { case (id, ts) =>
+      writer.write(groups.newGroup().append("event_id", id).append("ts", ts))
+    } finally writer.close()
     path
   }
+
+  private lazy val nanosFile: String =
+    writeNanos(s"${tmp("nanos")}/events.parquet", (1L to 3L).map(i => (i, i * 1000000000L)))
 
   test("every catalog table resolves Spark's inferred schema") {
     for (dir <- Seq(sfDir, "perfbench/data/sf0.01"); t <- tablesOf(dir)) {
@@ -160,6 +163,33 @@ class ParquetSchemaSpec extends SparkSpecBase {
       val viaFooter = intercept[Exception](ParquetSide.read(spark, path))
       val viaSpark = intercept[Exception](spark.read.parquet(path))
       assert(viaFooter.getMessage == viaSpark.getMessage, path)
+    }
+  }
+
+  test("compareAll on a TIMESTAMP(NANOS) column: raw nanos under nanosAsLong, Spark's error without") {
+    val base = tmp("nanosdiff")
+    val rows = (1L to 3L).map(i => (i, i * 1000000000L))
+    for (side <- Seq("a", "b")) Files.createDirectory(Paths.get(base, side))
+    writeNanos(s"$base/a/t.parquet", rows)
+    writeNanos(s"$base/b/t.parquet", rows.init :+ ((3L, rows.last._2 + 1L)))
+    def compare() = new graft.operators.DriftCompare(spark,
+      ParquetSide(spark, s"$base/a", "db1"), ParquetSide(spark, s"$base/b", "db2"))
+      .compareAll(parallelism = 2)
+    withNanosAsLong(on = true) {
+      val r = compare()
+      try {
+        val drift = r.dataDrift("t")
+        assert(drift.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+        assert(drift.select("observed_in", "event_id", "ts").as[(String, Long, Long)]
+          .collect().toSet == Set(("db1", 3L, 3000000000L), ("db2", 3L, 3000000001L)))
+        assert(r.summary == Seq(graft.operators.DataDriftSummaryRow("t", "db1", 1L, "db2", 1L)))
+      } finally r.dataDrift.values.foreach(_.unpersist())
+    }
+    withNanosAsLong(on = false) {
+      val before = spark.sparkContext.getPersistentRDDs.size
+      val e = intercept[org.apache.spark.sql.AnalysisException](compare())
+      assert(e.getCondition == "PARQUET_TYPE_ILLEGAL", e.getMessage)
+      assert(spark.sparkContext.getPersistentRDDs.size == before)
     }
   }
 }
