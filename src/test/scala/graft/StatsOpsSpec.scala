@@ -375,6 +375,26 @@ class StatsOpsSpec extends SparkSpecBase {
       p = 2.0, q = 4.0).count() == 65L)
   }
 
+  test("randomWalks holds none of its checkpoints once the result is released") {
+    // at walkLength = 24 the walk checkpoints its frontier and acc at steps
+    // 8 and 16; the step-8 pair is dead once the step-16 pair exists. The
+    // operator's RDDs are the ones created during the call, told apart by id.
+    val sc = spark.sparkContext
+    val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L)).toDF("src", "dst")
+    val starts = Seq(0L).toDF("id")
+    val firstId = sc.emptyRDD[Int].id
+    val walks = Graph.randomWalks(edges, starts, walkLength = 24)
+    val lastId = sc.emptyRDD[Int].id
+    val taken = sc.getPersistentRDDs.filter { case (id, _) => id > firstId && id < lastId }
+    assert(taken.nonEmpty, "the walk checkpoints its neighbor table")
+    assert(walks.count() == 25L)
+    graft.operators.Materialize.release(walks)
+    val held = taken.filter { case (_, rdd) =>
+      rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
+    }
+    assert(held.isEmpty, s"checkpoints still held after release: ${held.keys.toSeq.sorted}")
+  }
+
   test("walkContextPairs extracts windowed ordered pairs per walk") {
     // walk 1: 10 -> 20 -> 30; walk 2: 10 -> 20. window=2 rightward pairs:
     // (10,20)x2, (10,30), (20,30) — no cross-walk pairs.
