@@ -639,13 +639,13 @@ object Dedup {
     // min label travels 2^k hops after k rounds instead of k. A path
     // graph of diameter d converges in O(log d) rounds, not O(d) — the
     // difference between 6 and 10^6 shuffles on a worst-case 100 TB
-    // near-dup chain. `localCheckpoint(eager)` per round truncates
+    // near-dup chain. An eager checkpoint per round truncates
     // lineage: persist() alone leaves the logical plan DOUBLING per
     // round (the 2-self-reference union/join), which blows up analysis
     // cost exponentially long before any data does.
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .localCheckpoint(eager = true)
+    val loop = new Materialize.Loop
+    var labels = loop.checkpoint(edges.select(col("src").as("id")).distinct()
+      .withColumn("component", col("id")))
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
@@ -663,12 +663,10 @@ object Dedup {
         .join(oneHop.select(col("id").as("component"), col("component").as("_jc")),
           Seq("component"), "left")
         .select(col("id"), coalesce(col("_jc"), col("component")).as("component"))
-      val updated = jumped.localCheckpoint(eager = true)
+      val updated = loop.checkpoint(jumped)
       val changed = updated.join(labels.withColumnRenamed("component", "old"), Seq("id"))
         .filter(col("component") < col("old")).limit(1).count()
-      // the walk stops at the eager checkpoint, so the still-needed
-      // `edges` cache survives
-      Materialize.release(labels)
+      loop.keepOnly(updated)
       labels = updated
       converged = changed == 0
       iter += 1

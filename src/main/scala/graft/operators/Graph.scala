@@ -8,9 +8,10 @@ import PrefixSum.workPartition
 /** Iterative graph analytics on edge-list DataFrames. Complements the
   * connected-components operator in [[Dedup]] with a weighted-influence
   * ranking; both follow the same loop discipline — each iteration is one
-  * join + one aggregation (a single shuffle keyed on the node id), the
-  * new state is persisted and the previous unpersisted, so lineage stays
-  * flat and memory bounded no matter the iteration count.
+  * join + one aggregation (a single shuffle keyed on the node id), and
+  * the loop state goes through one [[Materialize.Loop]], which
+  * checkpoints it and frees what each checkpoint supersedes, so lineage
+  * stays flat and memory bounded no matter the iteration count.
   */
 object Graph {
 
@@ -34,17 +35,8 @@ object Graph {
     val outDeg = e.groupBy("src").agg(count(lit(1)).as("deg")).persist()
     val withDeg = e.join(outDeg, "src").persist()
     withDeg.count()
-    var ranks = nodes.withColumn("rank", lit(1.0 / n))
-      .localCheckpoint(eager = true)
-    // checkpoint every SECOND round plus the final one (the PPR/HITS
-    // cadence): eager actions are the fixed per-job overhead that
-    // dominates small inputs, and a skipped round's frame rides as a
-    // lazy persist() whose cache the next eager job populates — its two
-    // consumers (contribs + dangling) then share one computation.
-    // localCheckpoint (not persist alone) still does the lineage/
-    // analysis truncation at each materialization point.
-    var lastCkpt = ranks
-    var lastLazy: DataFrame = null
+    val loop = new Materialize.Loop
+    var ranks = loop.checkpoint(nodes.withColumn("rank", lit(1.0 / n)))
     var it = 0
     while (it < iters) {
       val contribs = withDeg
@@ -64,18 +56,10 @@ object Graph {
             lit(damping) * (coalesce(col("inbound"), lit(0.0)) +
               col("dangling") / lit(n)))
             .as("rank"))
-      val materialize = it % 2 == 1 || it == iters - 1
-      val next =
-        if (materialize) nextPlan.localCheckpoint(eager = true)
-        else nextPlan.persist()
-      if (materialize) {
-        // the pair's checkpoint and bridge cache are now dead — drop
-        // them or executor storage grows linearly with iters
-        Materialize.release(lastCkpt)
-        if (lastLazy != null) { lastLazy.unpersist(blocking = false); lastLazy = null }
-        lastCkpt = next
-      } else lastLazy = next
-      ranks = next
+      if (it % 2 == 1 || it == iters - 1) {
+        ranks = loop.checkpoint(nextPlan)
+        loop.keepOnly(ranks)
+      } else ranks = loop.persist(nextPlan)
       it += 1
     }
     nodes.unpersist(blocking = false)
@@ -185,9 +169,9 @@ object Graph {
     * two aggregations — (vertex, label) vote counts, then the per-vertex
     * argmax as a struct-max aggregation (map-side combined, never a
     * window over skewed neighborhoods; the [[Dedup]] survivorship
-    * pattern). Loop discipline as [[pageRank]]: localCheckpoint per
-    * round, previous round unpersisted, one scalar (changed count) to
-    * the driver for early exit. With `earlyExit = false` the loop runs
+    * pattern). Loop state as [[pageRank]]'s, checkpointed every second
+    * round plus the last ([[Materialize.Loop]]); one scalar (changed
+    * count) to the driver for early exit. With `earlyExit = false` the loop runs
     * exactly `maxIter` rounds with NO per-round convergence job — the
     * cheaper mode when the round budget is known (each convergence
     * check is a join + count job, which dominates on small graphs).
@@ -201,17 +185,11 @@ object Graph {
       .persist()
     val sym = und.select(col("a").as("v"), col("b").as("n"))
       .union(und.select(col("b").as("v"), col("a").as("n")))
-    var labels = und.select(col("a").as("id"))
+    val loop = new Materialize.Loop
+    var labels = loop.checkpoint(und.select(col("a").as("id"))
       .union(und.select(col("b").as("id"))).distinct()
-      .withColumn("community", col("id"))
-      .localCheckpoint(eager = true)
-    // checkpoint every SECOND round (the pageRank/PPR/HITS cadence):
-    // skipped rounds ride as a lazy persist() — under earlyExit the
-    // convergence count materializes the cache anyway, and both of the
-    // frame's next-round consumers (neighbor votes + self votes) then
-    // share it
-    var lastCkpt = labels
-    var lastLazy: DataFrame = null
+      .withColumn("community", col("id")))
+    var materialized = true
     var it = 0
     var changed = 1L
     while (changed > 0 && it < maxIter) {
@@ -225,35 +203,23 @@ object Graph {
         .groupBy(col("v").as("id"))
         .agg(max(struct(col("_c"), (-col("community")).as("_neg"))).as("_m"))
         .select(col("id"), (-col("_m._neg")).as("community"))
-      val materialize = it % 2 == 1 || it == maxIter - 1
-      val next =
-        if (materialize) nextPlan.localCheckpoint(eager = true)
-        else nextPlan.persist()
+      materialized = it % 2 == 1 || it == maxIter - 1
+      val next = if (materialized) loop.checkpoint(nextPlan) else loop.persist(nextPlan)
       changed =
         if (earlyExit)
           next.join(labels.withColumnRenamed("community", "_old"), "id")
             .filter(col("community") =!= col("_old")).count()
         else 1L
-      if (materialize) {
-        Materialize.release(lastCkpt)
-        if (lastLazy != null) { lastLazy.unpersist(blocking = false); lastLazy = null }
-        lastCkpt = next
-      } else lastLazy = next
+      if (materialized) loop.keepOnly(next)
       labels = next
       it += 1
     }
     und.unpersist(blocking = false)
-    // early exit can land on a NON-materialized (lazy persist()) round:
-    // a Dataset-level cache that [[Materialize.release]]'s RDD-lineage
-    // walker (plan-leaf RDDs only) cannot unpersist, pinning the
-    // blocks for the session. Honor the release contract — the
-    // returned frame is always a localCheckpoint — by materializing
-    // the final lazy round and dropping both caches it supersedes.
-    if (lastLazy ne null) {
-      val fin = labels.localCheckpoint(eager = true)
-      lastLazy.unpersist(blocking = false)
-      Materialize.release(lastCkpt)
-      labels = fin
+    // an early exit can land on a lazy round: checkpoint it, so the
+    // returned frame is one that Materialize.release frees
+    if (!materialized) {
+      labels = loop.checkpoint(labels)
+      loop.keepOnly(labels)
     }
     labels
   }
@@ -268,14 +234,13 @@ object Graph {
     * Shape: each round is one degree aggregation plus two semi-joins
     * filtering the edge list — all keyed on vertex id, so the
     * partitioning is reused round to round; the edge list only ever
-    * SHRINKS. Same loop discipline as [[pageRank]]: the new edge set is
-    * `localCheckpoint`ed (flat lineage) and the previous round's cache
-    * dropped; the only driver value per round is the surviving-edge
-    * count (the fixpoint test). Deep "onions" (a path graph peels one
-    * layer per round) may not reach the fixpoint within `maxIter`
-    * rounds; rather than return a confidently wrong vertex set, the
-    * operator THROWS when the cap is hit before convergence — raise
-    * `maxIter` for such graphs.
+    * SHRINKS. Every round's edge set is checkpointed and the previous
+    * one freed ([[Materialize.Loop]]); the only driver value per round
+    * is the surviving-edge count (the fixpoint test). Deep "onions" (a
+    * path graph peels one layer per round) may not reach the fixpoint
+    * within `maxIter` rounds; rather than return a confidently wrong
+    * vertex set, the operator THROWS when the cap is hit before
+    * convergence — raise `maxIter` for such graphs.
     */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
     require(k >= 1, "k must be >= 1")
@@ -283,7 +248,8 @@ object Graph {
       least(col("src"), col("dst")).cast("long").as("a"),
       greatest(col("src"), col("dst")).cast("long").as("b"))
       .filter(col("a") =!= col("b")).distinct()
-    var e = und.localCheckpoint(eager = true)
+    val loop = new Materialize.Loop
+    var e = loop.checkpoint(und)
     var n = e.count()
     var it = 0
     var converged = n == 0L
@@ -292,13 +258,12 @@ object Graph {
         .union(e.select(col("b").as("id")))
         .groupBy("id").agg(count(lit(1)).as("deg"))
       val keep = deg.filter(col("deg") >= k).select("id")
-      val next = e
+      val next = loop.checkpoint(e
         .join(keep.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("id", "b"), Seq("b"), "left_semi")
-        .select("a", "b")
-        .localCheckpoint(eager = true)
+        .select("a", "b"))
       val m = next.count()
-      Materialize.release(e)
+      loop.keepOnly(next)
       converged = m == n
       e = next
       n = m
@@ -415,9 +380,8 @@ object Graph {
     * and trust-rank filtering. r ← (1−d)·s + d·(Aᵀr + dangling·s),
     * s uniform over `seeds`.
     *
-    * Same loop shape as [[pageRank]] (one join + one agg per round),
-    * with lineage checkpointed every SECOND round (see the loop
-    * comment) and the [[hits]]
+    * Same loop shape as [[pageRank]] (one join + one agg per round,
+    * checkpointed every second round plus the last) and the [[hits]]
     * engine-replay contract: per-edge contributions and the new rank
     * quantize at 9 dp decimals each round, so an oracle can replay the
     * whole recursion from the edge list — and the dangling correction
@@ -441,17 +405,8 @@ object Graph {
       lit(1.0 / seedArr.length)).otherwise(lit(0.0))
     def quant(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       round(c, 9).cast("decimal(19,9)")
-    var ranks = nodes.select(col("id"), quant(sv).as("r"))
-      .localCheckpoint(eager = true)
-    // checkpoint every SECOND round (plus the final one): the fixed
-    // per-job launch overhead — not data volume — dominates the loop,
-    // so halving eager actions halves it. A skipped round's frame is
-    // lazily persist()ed instead: the next round reads it TWICE
-    // (contribs + dangling), and the cache — populated inside the next
-    // eager job, costing no extra job — keeps that from re-running the
-    // round's join+agg.
-    var lastCkpt = ranks
-    var lastLazy: DataFrame = null
+    val loop = new Materialize.Loop
+    var ranks = loop.checkpoint(nodes.select(col("id"), quant(sv).as("r")))
     var it = 0
     while (it < iters) {
       val contribs = e.join(outDeg, "src")
@@ -468,17 +423,10 @@ object Graph {
           lit(1.0 - damping) * sv + lit(damping) *
             (coalesce(col("inb").cast("double"), lit(0.0)) +
               col("dang").cast("double") * sv)).as("r"))
-      val materialize = it % 2 == 1 || it == iters - 1
-      val next =
-        if (materialize) nextPlan.localCheckpoint(eager = true)
-        else nextPlan.persist()
-      if (materialize) {
-        // the pair's checkpoint and intermediate cache are now dead
-        Materialize.release(lastCkpt)
-        if (lastLazy != null) { lastLazy.unpersist(blocking = false); lastLazy = null }
-        lastCkpt = next
-      } else lastLazy = next
-      ranks = next
+      if (it % 2 == 1 || it == iters - 1) {
+        ranks = loop.checkpoint(nextPlan)
+        loop.keepOnly(ranks)
+      } else ranks = loop.persist(nextPlan)
       it += 1
     }
     val out = ranks.select(col("id"), col("r").cast("double").as("ppr"))
@@ -498,14 +446,12 @@ object Graph {
     * normalizer an EXACT decimal sum instead of an L2 sqrt).
     *
     * Loop discipline: each half-step is one join + one aggregation
-    * keyed on the node id. The hub state checkpoints eagerly every
-    * SECOND round plus the final one (r18 — the pageRank/PPR cadence);
-    * every other half-step rides as a lazy persist() whose cache the
-    * next eager checkpoint's own job populates, so the fixed job-launch
-    * overhead (the dominant cost, not data volume) is paid once per TWO
-    * rounds instead of once per round. The round-0 authority step skips
-    * the hub join entirely: h₀ ≡ 1.000000000, so Σh over in-edges is
-    * the same exact decimal sum of ones — bit-identical, one join and
+    * keyed on the node id. The hub state checkpoints every second round
+    * plus the final one, and every other half-step rides as a lazy
+    * persist ([[Materialize.Loop]]; the pageRank/PPR cadence). The
+    * round-0 authority step skips the hub join entirely: h₀ ≡
+    * 1.000000000, so Σh over in-edges is the same exact decimal sum of
+    * ones — bit-identical, one join and
     * the initial hub checkpoint job saved. The final round checkpoints
     * both sides (the result join reads authority after the loop).
     * Engine replay:
@@ -521,6 +467,7 @@ object Graph {
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct().persist()
     nodes.count()
+    val loop = new Materialize.Loop
     def renorm(raw: DataFrame, valCol: String, out: String,
                materialize: Boolean): DataFrame = {
       val tot = raw.agg(sum(valCol).as("_t"))
@@ -530,7 +477,7 @@ object Graph {
           coalesce(round(col(valCol).cast("double") /
             col("_t").cast("double"), 9), lit(0.0))
             .cast("decimal(19,9)").as(out))
-      if (materialize) r.localCheckpoint(eager = true) else r.persist()
+      if (materialize) loop.checkpoint(r) else loop.persist(r)
     }
     // hub == null encodes the implicit all-ones h₀ (see scaladoc): the
     // round-0 authority sum is an exact decimal sum of ones per in-edge,
@@ -538,8 +485,6 @@ object Graph {
     // checkpoint job, no round-0 join
     var hub: DataFrame = null
     var auth: DataFrame = null
-    var lastCkpt: DataFrame = null
-    val lazies = scala.collection.mutable.ListBuffer.empty[DataFrame]
     var it = 0
     while (it < iters) {
       val last = it == iters - 1
@@ -556,19 +501,10 @@ object Graph {
         e.join(aNext.withColumnRenamed("id", "dst"), "dst")
           .groupBy(col("src").as("id")).agg(sum("a").as("_hr")),
         "_hr", "h", materialize = matH)
-      if (!last) {
-        if (!matH) lazies += hNext
-        lazies += aNext
-      }
-      if (matH) {
-        // an eager checkpoint just ran: every lazy frame accumulated
-        // since the previous checkpoint is fully consumed, and the
-        // previous checkpoint itself is dead
-        lazies.foreach(_.unpersist(blocking = false))
-        lazies.clear()
-        if (lastCkpt != null) Materialize.release(lastCkpt)
-        lastCkpt = hNext
-      }
+      // the result join reads the last authority; earlier ones are
+      // consumed by the hub step that follows them
+      if (last) loop.keepOnly(aNext, hNext)
+      else if (matH) loop.keepOnly(hNext)
       auth = aNext
       hub = hNext
       it += 1
@@ -580,6 +516,19 @@ object Graph {
     nodes.unpersist(blocking = false)
     out
   }
+
+  /** The walks' bound on walkLength: the result unions one frame per step. */
+  private def requireWalkLength(walkLength: Int): Unit =
+    require(walkLength >= 1 && walkLength <= 64,
+      "walkLength in [1, 64] (walks union one frame per step)")
+
+  /** A walk's step-k draw at its current node: the first 15 hex digits of
+    * md5("tag:seed:walk_id:k:node") as a Long (60 bits, non-negative and
+    * signed-long safe on both engines, so the oracles replay it exactly).
+    */
+  private def stepDraw(tag: String, seed: Long, k: Int): Column =
+    conv(substring(md5(concat_ws(":", lit(tag), lit(seed),
+      col("walk_id"), lit(k), col("node"))), 1, 15), 16, 10).cast("long")
 
   /** Seeded uniform random walks over a directed edge list — the
     * training-corpus generator for DeepWalk/node2vec-style graph
@@ -619,8 +568,7 @@ object Graph {
     */
   def randomWalks(edges: DataFrame, starts: DataFrame, walkLength: Int,
                   seed: Long = 7L, walksPerNode: Int = 1): DataFrame = {
-    require(walkLength >= 1 && walkLength <= 64,
-      "walkLength in [1, 64] (walks union one frame per step)")
+    requireWalkLength(walkLength)
     require(walksPerNode >= 1 && walksPerNode <= 1024,
       "walksPerNode in [1, 1024]")
     import org.apache.spark.sql.expressions.Window
@@ -657,16 +605,11 @@ object Graph {
             .otherwise(col("node") * walksPerNode + col("_r"))))
       .select("walk_id", "node")
     var acc = frontier.select(col("walk_id"), lit(0L).as("step"), col("node"))
+    val loop = new Materialize.Loop
     var k = 1
     while (k <= walkLength) {
-      // index = md5("rw:seed:walk:step:node") first 15 hex digits (60
-      // bits, signed-long safe on both engines) mod out-degree
       val withIdx = frontier.join(degs, "node")
-        .withColumn("_idx", pmod(
-          conv(substring(md5(concat_ws(":", lit("rw"), lit(seed),
-            col("walk_id"), lit(k), col("node"))), 1, 15), 16, 10)
-            .cast("long"),
-          col("deg")))
+        .withColumn("_idx", pmod(stepDraw("rw", seed, k), col("deg")))
       // fresh aliases per step: degs and nbr share lineage, so direct
       // dataset-column references trip the ambiguous-self-join guard
       val step = nbr.select(col("src").as("_ns"), col("dst").as("_nd"),
@@ -678,10 +621,9 @@ object Graph {
         next.select(col("walk_id"), lit(k.toLong).as("step"), col("node")))
       frontier = next
       if (k % 8 == 0 && k < walkLength) {
-        // truncate the unioned lineage every 8 steps (the pageRank
-        // cadence) so the walkLength = 64 bound stays analyzable
-        frontier = frontier.localCheckpoint(eager = true)
-        acc = acc.localCheckpoint(eager = true)
+        frontier = loop.checkpoint(frontier)
+        acc = loop.checkpoint(acc)
+        loop.keepOnly(frontier, acc)
       }
       k += 1
     }
@@ -731,8 +673,7 @@ object Graph {
     */
   def weightedWalks(edges: DataFrame, starts: DataFrame, walkLength: Int,
                     weightCol: String = "weight", seed: Long = 7L): DataFrame = {
-    require(walkLength >= 1 && walkLength <= 64,
-      "walkLength in [1, 64] (walks union one frame per step)")
+    requireWalkLength(walkLength)
     import org.apache.spark.sql.expressions.Window
     val nBuckets = 1024
     // bucket of a threshold-space point x in [0, tot]: computed by the
@@ -770,11 +711,10 @@ object Graph {
       .withColumn("walk_id", col("node"))
       .select("walk_id", "node")
     var acc = frontier.select(col("walk_id"), lit(0L).as("step"), col("node"))
+    val loop = new Materialize.Loop
     var k = 1
     while (k <= walkLength) {
-      val u = conv(substring(md5(concat_ws(":", lit("ww"), lit(seed),
-          col("walk_id"), lit(k), col("node"))), 1, 15), 16, 10)
-        .cast("long").cast("double") / lit(math.scalb(1.0, 60))
+      val u = stepDraw("ww", seed, k).cast("double") / lit(math.scalb(1.0, 60))
       // threshold + its coarse bucket first (frontier-sized; AQE
       // broadcasts tots when small), then the interval filter rides the
       // (node, bucket) step join as a residual predicate — evaluated as
@@ -794,8 +734,9 @@ object Graph {
         picked.select(col("walk_id"), lit(k.toLong).as("step"), col("node")))
       frontier = picked
       if (k % 8 == 0 && k < walkLength) {
-        frontier = frontier.localCheckpoint(eager = true)
-        acc = acc.localCheckpoint(eager = true)
+        frontier = loop.checkpoint(frontier)
+        acc = loop.checkpoint(acc)
+        loop.keepOnly(frontier, acc)
       }
       k += 1
     }
@@ -854,8 +795,7 @@ object Graph {
   def node2vecWalks(edges: DataFrame, starts: DataFrame, walkLength: Int,
                     p: Double = 1.0, q: Double = 1.0,
                     seed: Long = 7L, maxDeg: Option[Int] = None): DataFrame = {
-    require(walkLength >= 1 && walkLength <= 64,
-      "walkLength in [1, 64] (walks union one frame per step)")
+    requireWalkLength(walkLength)
     require(p > 0 && q > 0, "p and q must be positive")
     import org.apache.spark.sql.expressions.Window
     // e is read by the distance-1 flag join EVERY step (walkLength
@@ -879,6 +819,7 @@ object Graph {
       .withColumn("prev", lit(null).cast("long"))
       .select("walk_id", "node", "prev")
     var acc = frontier.select(col("walk_id"), lit(0L).as("step"), col("node"))
+    val loop = new Materialize.Loop
     var k = 1
     while (k <= walkLength) {
       val cand = frontier
@@ -895,9 +836,7 @@ object Graph {
       // one frontier row per walk per step, so walk_id alone keys the
       // selection window; partition size = the current node's out-degree
       val cw = Window.partitionBy("walk_id").orderBy("_rnk")
-      val u = conv(substring(md5(concat_ws(":", lit("n2v"), lit(seed),
-          col("walk_id"), lit(k), col("node"))), 1, 15), 16, 10)
-        .cast("long").cast("double") / lit(math.scalb(1.0, 60))
+      val u = stepDraw("n2v", seed, k).cast("double") / lit(math.scalb(1.0, 60))
       val picked = cand
         .withColumn("_cum", sum(col("_w")).over(
           cw.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -914,8 +853,9 @@ object Graph {
         picked.select(col("walk_id"), lit(k.toLong).as("step"), col("node")))
       frontier = picked
       if (k % 8 == 0 && k < walkLength) {
-        frontier = frontier.localCheckpoint(eager = true)
-        acc = acc.localCheckpoint(eager = true)
+        frontier = loop.checkpoint(frontier)
+        acc = loop.checkpoint(acc)
+        loop.keepOnly(frontier, acc)
       }
       k += 1
     }
@@ -999,8 +939,7 @@ object Graph {
     */
   def temporalWalks(edges: DataFrame, starts: DataFrame, walkLength: Int,
                     seed: Long = 7L, maxDeg: Option[Int] = None): DataFrame = {
-    require(walkLength >= 1 && walkLength <= 64,
-      "walkLength in [1, 64] (walks union one frame per step)")
+    requireWalkLength(walkLength)
     maxDeg.foreach(d => require(d >= 1, "maxDeg must be >= 1"))
     import org.apache.spark.sql.expressions.Window
     val e0 = edges.select(col("src").cast("long").as("src"),
@@ -1055,17 +994,14 @@ object Graph {
         lit(0L).as("lo"), col("_ddeg").as("cnt"))
     var acc = base.select(col("node").as("walk_id"), lit(0L).as("step"),
       col("node"), lit(null).cast("long").as("ts"))
+    val loop = new Materialize.Loop
     var k = 1
     while (k <= walkLength) {
       val stepAdj = adj.select(col("src").as("_as"), col("rnk").as("_ar"),
         col("dst").as("_ad"), col("ts").as("_ats"),
         col("nlo").as("_alo"), col("ncnt").as("_acnt"))
       val next = frontier.filter(col("cnt") > 0)
-        .withColumn("_idx", col("lo") + pmod(
-          conv(substring(md5(concat_ws(":", lit("tw"), lit(seed),
-            col("walk_id"), lit(k), col("node"))), 1, 15), 16, 10)
-            .cast("long"),
-          col("cnt")))
+        .withColumn("_idx", col("lo") + pmod(stepDraw("tw", seed, k), col("cnt")))
         .join(stepAdj,
           col("node") === col("_as") && col("_idx") === col("_ar"))
         .select(col("walk_id"), col("_ad").as("node"),
@@ -1075,8 +1011,9 @@ object Graph {
         lit(k.toLong).as("step"), col("node"), col("ts")))
       frontier = next.select("walk_id", "node", "lo", "cnt")
       if (k % 8 == 0 && k < walkLength) {
-        frontier = frontier.localCheckpoint(eager = true)
-        acc = acc.localCheckpoint(eager = true)
+        frontier = loop.checkpoint(frontier)
+        acc = loop.checkpoint(acc)
+        loop.keepOnly(frontier, acc)
       }
       k += 1
     }

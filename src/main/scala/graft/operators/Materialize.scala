@@ -14,6 +14,8 @@ import org.apache.spark.sql.DataFrame
   *    outlive the operator that built it: a `localCheckpoint`ed loop
   *    state, or a result read lazily from a checkpoint (budget selects,
   *    graph results). Call it after the last action on the frame.
+  *  - [[Loop]] tracks the state an iterative operator pins round by
+  *    round and frees what each checkpoint supersedes.
   */
 object Materialize {
 
@@ -41,6 +43,48 @@ object Materialize {
     df.queryExecution.logical.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD => walk(lr.rdd, 0)
       case _ => ()
+    }
+  }
+
+  /** The state of one iterative loop (nine in [[Graph]], and
+    * [[Dedup.connectedComponents]]). Each round's state is an eager
+    * [[checkpoint]] on the loop's cadence, which truncates the plan so
+    * analysis cost stays flat at any round count; a round off the
+    * cadence is a lazy [[persist]], whose cache the next checkpoint's
+    * job fills, so its consumers share one computation and the fixed
+    * per-job overhead that dominates small graphs is paid once per
+    * checkpoint. After a round's checkpoints, [[keepOnly]] with the live
+    * frames frees everything older: executor storage stays at one
+    * round's state, and the returned frame reads only checkpoints that
+    * [[release]] reaches.
+    *
+    * Call `keepOnly` only when every live frame is an eager checkpoint:
+    * a lazy frame is computed by the next job that reads it, which needs
+    * the frames it was built from. Keep frames persisted outside the
+    * loop (edge lists, degree tables) out of it; a dead checkpoint's
+    * release stops at the checkpoint and never reaches them.
+    */
+  final class Loop {
+    /** The frames pinned and not yet freed, each with whether it is a checkpoint. */
+    private var pinned = Vector.empty[(DataFrame, Boolean)]
+
+    private def pin(df: DataFrame, eager: Boolean): DataFrame = {
+      pinned :+= (df -> eager)
+      df
+    }
+
+    def checkpoint(df: DataFrame): DataFrame = pin(df.localCheckpoint(eager = true), eager = true)
+
+    def persist(df: DataFrame): DataFrame = pin(df.persist(), eager = false)
+
+    /** Frees every pinned frame but `live`: a checkpoint through
+      * [[release]], a lazy cache through `unpersist`, since the plan, not
+      * an RDD, holds that cache and [[release]] cannot reach it.
+      */
+    def keepOnly(live: DataFrame*): Unit = {
+      val (kept, dead) = pinned.partition { case (df, _) => live.exists(_ eq df) }
+      dead.foreach { case (df, eager) => if (eager) release(df) else df.unpersist(blocking = false) }
+      pinned = kept
     }
   }
 }

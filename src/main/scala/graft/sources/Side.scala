@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -99,9 +99,11 @@ object ParquetSide {
     * (`ParquetUtils.inferSchema`), converted by Spark's own converter
     * under the session's conf. A partitioned directory, a glob, a
     * session with `spark.sql.parquet.mergeSchema` on (Spark then merges
-    * every file's schema), or a path whose footer cannot be read or
-    * converted goes to `spark.read.parquet`, so its schema and its errors
-    * stay Spark's.
+    * every file's schema), or a path whose footer cannot be read goes to
+    * `spark.read.parquet`, so its schema and its errors stay Spark's. A
+    * footer the converter rejects (a TIMESTAMP(NANOS) column without
+    * `nanosAsLong`) throws the converter's AnalysisException here, the
+    * error inference would raise, without running inference's failing job.
     *
     * `nanosAsLong` converts the footer as `spark.sql.legacy.parquet.nanosAsLong`
     * would, for this one read: a TIMESTAMP(NANOS) column resolves to its
@@ -134,7 +136,10 @@ object ParquetSide {
         ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
           new ParquetToSparkSchemaConverter(readConf))
       }
-    } catch { case NonFatal(_) => None }
+    } catch {
+      case e: AnalysisException => throw e
+      case NonFatal(_) => None
+    }
 
   /** The file Spark's inference takes the schema from: the path itself if
     * it is a file; in a flat directory `_common_metadata`, else

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * ExplainQ and the perfbench harness, all under GraftSession's config; a
   * new `def main` would be a one-off driver with its own session and knobs.
   * Also pins the registry's one table-read path, `Tables`, the canonical
-  * hash's one byte writer, and the one home of explicit partition widths.
+  * hash's one byte writer, the one home of explicit partition widths, and
+  * the graph loops' one state tracker.
   */
 class EntrypointSpec extends AnyFunSuite {
   private val owner =
@@ -57,6 +58,16 @@ class EntrypointSpec extends AnyFunSuite {
       if src.contains(token) && !owners.contains(f.toString)
     } yield s"$token in $f"
     assert(offenders.isEmpty, s"${offenders.mkString(", ")}; use PrefixSum.width, workPartition or running")
+  }
+
+  test("the graph loops free their state only through Materialize.Loop") {
+    val offenders = for {
+      f <- Seq("src/main/scala/graft/operators/Graph.scala", "src/main/scala/graft/operators/Dedup.scala")
+      src = new String(Files.readAllBytes(Paths.get(f)), UTF_8)
+      token <- Seq("Materialize.release(", "lastLazy")
+      if src.contains(token)
+    } yield s"$token in $f"
+    assert(offenders.isEmpty, s"${offenders.mkString(", ")}; use Materialize.Loop's keepOnly")
   }
 
   test("the canonical hash has one writer, over bytes: no StringBuilder in CanonicalHash.scala") {

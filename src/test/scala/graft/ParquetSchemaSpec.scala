@@ -107,6 +107,15 @@ class ParquetSchemaSpec extends SparkSpecBase {
     }
   }
 
+  test("a NANOS ts without nanosAsLong fails in the footer read, before any Spark job") {
+    withNanosAsLong(on = false) {
+      val (e, jobs) = withJobCount(intercept[org.apache.spark.sql.AnalysisException](
+        ParquetSide.read(spark, nanosFile)))
+      assert(e.getCondition == "PARQUET_TYPE_ILLEGAL", e.getMessage)
+      assert(jobs == 0)
+    }
+  }
+
   test("Tables.events reads a NANOS ts for itself: Tables.t on the file throws before and after") {
     withNanosAsLong(on = false) {
       val dir = new java.io.File(nanosFile).getParent

@@ -395,6 +395,37 @@ class StatsOpsSpec extends SparkSpecBase {
     assert(held.isEmpty, s"checkpoints still held after release: ${held.keys.toSeq.sorted}")
   }
 
+  test("Materialize.Loop.keepOnly frees dead checkpoints and lazy caches, keeps live frames and outside caches") {
+    import graft.operators.Materialize
+    import org.apache.spark.storage.StorageLevel
+    def leafRdds(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.logical.collect { case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd }
+    val outside = spark.range(0, 200).withColumn("tag", lit("loop-outside")).persist()
+    try {
+      outside.count()
+      val loop = new Materialize.Loop
+      val deadCkpt = loop.checkpoint(outside.filter(col("id") % 2 === 0))
+      val deadLazy = loop.persist(deadCkpt.filter(col("id") % 4 === 0))
+      // the live checkpoints read the lazy frame, whose cache their jobs fill
+      val live = loop.checkpoint(deadLazy.filter(col("id") < 100))
+      val live2 = loop.checkpoint(deadLazy.filter(col("id") >= 100))
+      val dead = leafRdds(deadCkpt)
+      val kept = leafRdds(live) ++ leafRdds(live2)
+      assert(dead.size == 1 && kept.size == 2)
+      assert((dead ++ kept).forall(_.getStorageLevel != StorageLevel.NONE))
+      assert(deadLazy.storageLevel == StorageLevel.MEMORY_AND_DISK)
+      loop.keepOnly(live, live2)
+      assert(dead.head.getStorageLevel == StorageLevel.NONE)
+      assert(deadLazy.storageLevel == StorageLevel.NONE)
+      assert(kept.forall(_.getStorageLevel != StorageLevel.NONE))
+      assert(outside.storageLevel == StorageLevel.MEMORY_AND_DISK)
+      assert(live.count() + live2.count() == 50L)
+      loop.keepOnly()
+      assert(kept.forall(_.getStorageLevel == StorageLevel.NONE))
+      assert(outside.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    } finally outside.unpersist()
+  }
+
   test("walkContextPairs extracts windowed ordered pairs per walk") {
     // walk 1: 10 -> 20 -> 30; walk 2: 10 -> 20. window=2 rightward pairs:
     // (10,20)x2, (10,30), (20,30) — no cross-walk pairs.
